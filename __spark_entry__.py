@@ -1,4 +1,4 @@
-"""Driver contract for the spark-graft builder (PySpark target).
+"""Driver contract of the engine's query registry (PySpark target).
 
 ``entry(spark)`` runs the flagship pricing-summary aggregation on sf0.001;
 ``queries()`` / ``oracle_sql()`` expose the engine's oracle-checked registry
@@ -20,192 +20,23 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["a1_pricing_summary"](spark, "/root/testdata/sf0.001")
 
 
-# Most recent round in which each query earned a green (rows+schema+hash)
-# driver row, taken from the union of all CORRECTNESS_r*.json artifacts.
-# Queries absent from this map have never been driver-verified and get first
-# claim on the capped oracle slots; verified queries rotate
-# least-recently-first so every query keeps cycling back through the driver
-# instead of the same ~45 re-running forever. The block below is GENERATED —
-# refresh each round with `python tools/refresh_green.py` (a stale map fails
-# tests/test_refresh_green.py).
-# BEGIN LAST_GREEN_ROUND (generated by tools/refresh_green.py)
-LAST_GREEN_ROUND: dict[str, int] = {
-    # r08
-    "hh1_heavy_hitter_tokens_documents": 8, "hs1_hll_weekly_rollup_events": 8,
-    "iv1_inverted_search_documents": 8, "kl1_source_drift_documents": 8,
-    "lj1_lateral_top2_orders": 8, "mb1_brand_basket_lift": 8,
-    "n3_topk_cosine_embeddings": 8, "n4_jaccard_pairs_documents": 8,
-    "n6_simhash_documents": 8, "ng1_repeated_ngrams_documents": 8,
-    "ns1_negative_samples_documents": 8, "ol1_ratio_to_report_revenue": 8,
-    "p7_profile_cache_events": 8, "pd2_python_datasink_roundtrip": 8,
-    "pl2_pipeline_event_log_events": 8, "pm1_pmi_collocations_documents": 8,
-    "pq1_pq_topk_embeddings": 8, "qz1_quantized_embedding_error": 8,
-    "sa1_seasonal_index_events": 8, "sg1_skipgram_pairs_documents": 8,
-    "ss1_prefix_jaccard_documents": 8, "st8_streaming_quarantine_events": 8,
-    "st9_stream_outer_join_events": 8, "tf1_tfidf_top_terms_documents": 8,
-    "tz1_local_day_events": 8, "u5_polymorphic_udtf_top_tokens": 8,
-    "u6_arrow_udf_rot13_customers": 8, "u7_apply_in_arrow_events": 8,
-    "ws1_weighted_sample_documents": 8, "wt1_welch_weekend_events": 8,
-    "zf1_zipf_fit_documents": 8, "zo1_zorder_layout_events": 8,
-    # r09
-    "ad1_approx_distinct_customers": 9, "bk1_bucketed_join_revenue": 9,
-    "bl1_blocked_editdist_documents": 9, "ch1_chunk_documents": 9,
-    "csv1_roundtrip_events": 9, "da1_describe_auto_orders": 9,
-    "dc1_decontaminate_documents": 9, "dq1_validation_rules_events": 9,
-    "fz1_fuzzy_match_nation": 9, "gq1_repetition_quality_documents": 9,
-    "j8_shipping_priority": 9, "js1_jsonl_roundtrip_events": 9,
-    "lk1_split_leakage_documents": 9, "md1_mad_outliers_events": 9,
-    "mm1_image_features_documents": 9, "mm2_audio_features_documents": 9,
-    "mm3_frame_sample_documents": 9, "nt1_quartiles_orders": 9,
-    "p2_shape_lineitem": 9, "p5_describe_lineitem": 9,
-    "p5a_describe_approx_lineitem": 9, "p6_null_counts_events": 9,
-    "p8_value_counts_priority": 9, "p9_duplicate_count_documents": 9,
-    "pi1_redact_pii_documents": 9, "pv1_pivot_events": 9,
-    "r1_rollup_orders": 9, "s1_setops_active_customers": 9,
-    "s2_setops_priority_rows": 9, "st2_streaming_sessions": 9,
-    "st3_streaming_dedup_count": 9, "t10_dual_format_dates": 9,
-    "t11_phone_normalize": 9, "t13_na_sentinel_events": 9,
-    "t1_median_fill_events": 9, "t2_mean_fill_events": 9,
-    "t4_fill_min_date_orders": 9, "t5_outlier_null_impute_orders": 9,
-    "t6_cap_p95_orders": 9, "t7t8t9_string_clean_nation": 9,
-    "tw1_temperature_weights_documents": 9, "u1_zscore_by_type_events": 9,
-    "u2_name_digitsum_customers": 9, "w2_cumulative_spend": 9,
-    "w3_event_gaps": 9, "w4_rolling_avg_spend": 9, "x1_crosstab_events": 9,
-    # r10
-    "a2_group_stats_events": 10, "a4_mode_priority": 10,
-    "a7_corr_lineitem": 10, "an1_rolling_anomaly_events": 10,
-    "c1_cube_orders": 10, "cc1_components_documents": 10,
-    "cd1_apply_changes_orders": 10, "cd2_scd2_orders": 10,
-    "ct1_chi2_events": 10, "dg1_cosupply_rollup_topk": 10,
-    "dg2_trade_edges_checksum": 10, "f1_f2_dropnull_sigma_events": 10,
-    "fn1_funnel_events": 10, "g1_grouping_sets_orders": 10,
-    "hg1_histogram_totalprice": 10, "im1_incremental_rollup_orders": 10,
-    "j1_revenue_by_segment": 10, "j2_customers_without_orders": 10,
-    "j3_customers_with_1997_orders": 10, "j4_revenue_by_region": 10,
-    "j5_asof_last_purchase": 10, "j6_brand_revenue": 10,
-    "j7_supplier_region_revenue": 10, "jn1_json_map_events": 10,
-    "k1_top10_orders": 10, "lm1_ngram_coverage_documents": 10,
-    "pk1_pack_documents": 10, "pl1_pipeline_spec_events": 10,
-    "pp1_partition_pruned_events": 10, "rh1_winnow_fingerprints_documents": 10,
-    "rj1_time_bands_events": 10, "rp1_report_events": 10,
-    "sb1_stratified_sample_events": 10, "se1_schema_evolution_orders": 10,
-    "sj1_salted_join_segments": 10, "sk1_key_skew_orders": 10,
-    "sm1_seeded_sample_orders": 10, "sn1_sessionize_events": 10,
-    "sp1_hash_split_documents": 10, "sq1_portable_sql_revenue": 10,
-    "st4_streaming_enriched_segments": 10, "st5_incremental_rollup_events": 10,
-    "st6_stateful_user_totals": 10, "tp1_two_phase_agg_orders": 10,
-    "ts1_resample_hourly_events": 10, "u3_trimmed_mean_orders": 10,
-    "u4_udtf_tokens_documents": 10,
-    # r11
-    "a8_forecast_revenue_change": 11, "ac1_autocorr_hourly_events": 11,
-    "al1_allocate_order_totals": 11, "at1_last_touch_attribution_events": 11,
-    "cq1_csv_quarantine_events": 11, "cu1_changepoint_daily_orders": 11,
-    "df1_snapshot_diff_orders": 11, "ew1_ewma_user_level_events": 11,
-    "fi1_frequent_part_pairs": 11, "gp1_gaps_islands_events": 11,
-    "hq1_histogram_median_rollup_orders": 11,
-    "in1_linear_interpolate_events": 11, "ix1_index_freshness_audit": 11,
-    "j10_local_supplier_revenue": 11, "j11_disjunctive_promo_revenue": 11,
-    "j12_region_trade_volume": 11, "j13_market_share": 11,
-    "j14_returned_items": 11, "j15_promo_revenue": 11,
-    "j16_product_type_profit": 11, "j9_customer_order_distribution": 11,
-    "mf1_dataset_manifest_documents": 11, "mx1_mixture_sample_documents": 11,
-    "n10_lsh_pruned_topk_embeddings": 11, "n11_ivf_pruned_topk_embeddings": 11,
-    "n12_incremental_neardup_documents": 11, "n2_text_stats_documents": 11,
-    "n5_minhash_neardup_documents": 11, "n7_lsh_topk_embeddings": 11,
-    "n8_embedding_neardup_pairs": 11, "n9_ivf_topk_embeddings": 11,
-    "or1_orc_roundtrip_events": 11, "pd1_python_datasource": 11,
-    "px1_bigram_xent_documents": 11, "qs1_source_quota_documents": 11,
-    "qt1_quantiles_by_type_events": 11, "rc1_retention_events": 11,
-    "ri1_referential_integrity": 11, "rs1_repeated_ngram_spans_documents": 11,
-    "sd1_semantic_dedup_embeddings": 11, "st7_stream_stream_join_events": 11,
-    "sub1_small_quantity_revenue": 11, "sub2_large_volume_customers": 11,
-    "tk1_top3_orders_per_priority": 11, "ts2_gap_fill_events": 11,
-    "vr1_variant_events": 11, "w1_top_order_per_customer": 11,
-    # r12
-    "a1_pricing_summary": 12, "abc1_pareto_class_parts": 12,
-    "aq1_adaptive_quality_filter_documents": 12,
-    "bf1_benford_order_totals": 12, "bin1_binaryfile_ingest_documents": 12,
-    "bm1_bm25_rank_documents": 12, "bp1_bpe_pair_counts_documents": 12,
-    "bp2_bpe_merge_apply_documents": 12, "cl1_label_centroid_confusion": 12,
-    "cm1_compaction_events": 12, "dd1_crossmodal_neardup_audit": 12,
-    "ds1_calendar_spine_events": 12, "en1_user_entropy_events": 12,
-    "gd1_golden_record_users": 12, "gi1_gini_customer_revenue": 12,
-    "gr1_pagerank_trade_graph": 12, "ix2_lsh_freshness_audit": 12,
-    "km1_survival_users_events": 12, "ks1_ks_drift_events": 12,
-    "li1_language_id_documents": 12, "mc1_peak_open_orders": 12,
-    "mk1_markov_transitions_events": 12, "n1_exact_dedup_documents": 12,
-    "oh1_ohlc_hourly_events": 12, "pit1_point_in_time_priority": 12,
-    "pq1_pipe_syntax_revenue": 12, "pv2_file_provenance_events": 12,
-    "qf1_quality_classifier_documents": 12, "rfm1_rfm_segments_customers": 12,
-    "rg1_value_trend_by_type": 12, "rl1_record_linkage_customers": 12,
-    "rx1_recursive_reachability": 12,
-    "sd2_semantic_dedup_recall_embeddings": 12,
-    "sq2_signup_conversion_pattern": 12, "st1_streaming_window_counts": 12,
-    "sub10_global_sales_opportunity": 12, "sub3_min_cost_supplier": 12,
-    "sub4_last_shipper_multi_supplier": 12, "sub5_untapped_customers": 12,
-    "sub6_top_revenue_suppliers": 12, "sub7_key_part_revenue_share": 12,
-    "sub8_dominant_red_part_suppliers": 12, "sub9_part_supplier_counts": 12,
-    "tr1_triangle_count": 12, "up1_unpivot_order_metrics": 12,
-    "ur1_url_domain_dedup_documents": 12, "wa1_weekly_active_users_events": 12,
-    "wm1_weighted_median_price": 12, "wq1_rank_distribution_orders": 12,
-    "xm1_xml_roundtrip_events": 12,
-}
-# END LAST_GREEN_ROUND
-
-DRIVER_VERIFIED = frozenset(LAST_GREEN_ROUND)
-
-# Small always-run regression set of established queries, one per major
-# tier family (relational, dedup, streaming) — kept ahead of the
-# never-verified block so a capped pass still cross-checks prior rounds.
-# Shrunk 5 -> 3 in round 6: the round added >45 never-verified queries, so
-# every canary slot now starves a new query of its first driver row; the
-# join/window canaries (j1/w1) were cut because their families are also
-# exercised by a1's scan+agg and the stalest-rotation re-verifies them soon.
-CANARIES = ("a1_pricing_summary", "n1_exact_dedup_documents",
-            "st1_streaming_window_counts")
-
-# The driver's oracle pass verifies at most this many queries per round.
-DRIVER_SLOT_CAP = 50
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2 (relational tier in
-    queryset.py, LLM-data-pipeline tier in queryset_nstar.py).
+    queryset.py, LLM-data-pipeline tier in queryset_nstar.py), in registration
+    order."""
+    from agent_data_wrangler_spark.queryset import QUERIES as Q1
+    from agent_data_wrangler_spark.queryset_nstar import QUERIES as Q2
 
-    Iteration order is deliberate: the driver's oracle pass caps at 50
-    queries, so the slots are rationed — a 3-query established canary set
-    first, then every oracle query that has never received a driver
-    correctness row (the round-3 lesson: ordering established queries first
-    guaranteed new work was never driver-verified), then the already-verified
-    oracles LEAST-RECENTLY-verified first (the round-4 lesson: once every
-    query is verified, a static verified set would re-run the same slate
-    forever — rotating by last-green round re-verifies the stalest ~40 each
-    round), and rows-only queries (which get the weaker check regardless)
-    last.
-    """
-    from agent_data_wrangler_spark.queryset import ORACLE as O1, QUERIES as Q1
-    from agent_data_wrangler_spark.queryset_nstar import ORACLE as O2, QUERIES as Q2
-
-    q = {**Q1, **Q2}
-    o = {**O1, **O2}
-    canaries = [k for k in CANARIES if k in q]
-    unverified = [k for k in q if k in o and k not in LAST_GREEN_ROUND]
-    verified = sorted(
-        (k for k in q
-         if k in o and k in LAST_GREEN_ROUND and k not in CANARIES),
-        key=lambda k: (LAST_GREEN_ROUND[k], k))
-    rows_only = [k for k in q if k not in o]
-    return {k: q[k] for k in canaries + unverified + verified + rows_only}
+    return {**Q1, **Q2}
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL equivalent for each registered query — the
-    full registry (210 as of round 8, plus detection-gated st10/av1) carries oracles; see
-    tests/test_oracle_parity.py. The formerly rows-only engine-hash paths
-    (n5/n7/n8/n9)
-    carry verdict oracles: the invariant (recall vs exact, subset/containment)
-    is computed in Spark and emitted as verdict booleans next to hard values
-    DuckDB recomputes from scratch."""
+    """DuckDB-runnable SQL equivalent for each registered query; every query
+    carries one (tests/test_oracle_parity.py). Engine-hash paths such as the
+    n5/n7/n8/n9 near-duplicate and ANN queries carry verdict oracles: the
+    invariant (recall vs exact, subset/containment) is computed in Spark and
+    emitted as verdict booleans next to hard values DuckDB recomputes from
+    scratch."""
     from agent_data_wrangler_spark.queryset import ORACLE
     from agent_data_wrangler_spark.queryset_nstar import ORACLE as NSTAR
 

@@ -41,11 +41,10 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
 
 
-def query(name: str, oracle: str | None = None):
+def query(name: str, oracle: str):
     def deco(fn):
         QUERIES[name] = fn
-        if oracle is not None:
-            ORACLE[name] = oracle
+        ORACLE[name] = oracle
         return fn
 
     return deco

@@ -1,11 +1,8 @@
 """Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints a full
-per-query JSON line followed by a short final summary line
-{"metric": ..., "value": N, "unit": "sec", "sf": ...} sized to survive the
-driver's bounded stdout-tail capture (per-query timings also mirror to
-stderr), and persists the complete payload to $SPARK_GRAFT_BENCH_OUT
-(default BENCH_local_latest.json next to this file) so per-query diffs
-never depend on the truncated tail.
+(default: the sf0.1 test data) on local[$SPARK_GRAFT_CPUS], writes the full
+per-query payload to $SPARK_GRAFT_BENCH_OUT (default BENCH_local_latest.json
+next to this file) and prints one summary line
+{"metric": ..., "value": N, "unit": "sec", "sf": ...} as the last stdout line.
 
 Each query is forced through a noop sink (df.write.format("noop")) so the full
 plan executes — aggregation, shuffle, window — without driver-side collect
@@ -121,13 +118,6 @@ def main() -> None:
 
     sf_raw = sf_dir.rstrip("/").split("sf")[-1]
     sf = float(sf_raw) if sf_raw.replace(".", "").isdigit() else sf_raw
-    # Round-3 lesson: the driver keeps only a bounded stdout TAIL, and the
-    # single 83-query JSON line outgrew it (BENCH_r03 "parsed": null). So:
-    # full per-query line FIRST (visible when the tail is long enough, and
-    # mirrored per-query on stderr), then a short complete summary line LAST —
-    # the last stdout line must always fit the tail.
-    for name in sorted(timings):
-        print(f"bench_query {name} {timings[name]}", file=sys.stderr)
     payload = {
         "metric": "total_query_wall_time",
         "value": total,
@@ -137,27 +127,8 @@ def main() -> None:
         "queries": timings,
         "sf": sf,
     }
-    print(json.dumps(payload))
-    # Round-13 verdict item 2: the driver keeps only a bounded stdout TAIL
-    # (~2000 chars), so the single 228-entry per-query line above never
-    # survives it and the driver's round-over-round PERF comparison came back
-    # empty (PERF_r13 per_query: {}, n_common: 0). Re-emit the SAME timings as
-    # many SHORT standalone JSON lines (8 queries each, alphabetical — the
-    # same ordering as the full line, so the tail-visible region is stable
-    # across rounds) near the END of stdout; whatever the tail keeps is now
-    # whole parseable lines instead of the middle of one giant line.
-    # Additions only: the full line stays first, the summary line stays last.
-    names = sorted(timings)
-    n_chunks = (len(names) + 7) // 8
-    for i in range(n_chunks):
-        chunk = {n: timings[n] for n in names[i * 8:(i + 1) * 8]}
-        print(json.dumps(
-            {"part": f"{i + 1}/{n_chunks}", "queries": chunk},
-            separators=(",", ":")))
-    # Round-7 verdict item 4: the driver's stdout tail truncates the full
-    # per-query line (~51/205 visible), so round-over-round per-query diffs
-    # need a file. Written next to the repo root (or $SPARK_GRAFT_BENCH_OUT);
-    # commit it as BENCH_local_rNN.json when recording a round.
+    # Per-query timings go to a file, not stdout: commit it as
+    # history/BENCH_local_rNN.json when recording a round.
     out_path = os.environ.get(
         "SPARK_GRAFT_BENCH_OUT",
         os.path.join(os.path.dirname(os.path.abspath(__file__)),
@@ -168,14 +139,10 @@ def main() -> None:
             fh.write("\n")
     except OSError as exc:
         print(f"bench: could not write {out_path}: {exc}", file=sys.stderr)
-    print(
-        json.dumps(
-            {"metric": "total_query_wall_time", "value": total, "unit": "sec",
-             "protocol": "sum_of_min_of_2_passes", "wall_clock_s": wall_clock,
-             "sf": sf, "n_queries": len(timings),
-             "failed": sorted(k for k, v in timings.items() if v < 0)}
-        )
-    )
+    summary = {k: v for k, v in payload.items() if k != "queries"}
+    print(json.dumps({
+        **summary, "n_queries": len(timings),
+        "failed": sorted(k for k, v in timings.items() if v < 0)}))
 
 
 if __name__ == "__main__":

@@ -1,10 +1,10 @@
 """Per-query bench regression gate (r08 verdict item 6).
 
 Compares the most recent local bench capture (``BENCH_local_latest.json``,
-written by every ``python bench.py`` run) against the last COMMITTED
-round record (the highest-numbered ``BENCH_local_rNN.json``) and fails on
-any query that regressed more than 2x — but only for queries whose
-committed time exceeds 0.5 s, which filters the run-to-run noise floor
+written by every ``python bench.py`` run) against the committed baseline
+``BASELINE`` (sf0.1, all 228 queries, captured after the r14 plan changes)
+and fails on any query that regressed more than 2x — but only for queries
+whose committed time exceeds 0.5 s, which filters the run-to-run noise floor
 (±20% plus multi-second GC spikes on a shared 32-thread JVM; see
 .claude/skills/verify/SKILL.md) while still catching real plan
 regressions (a lost broadcast, a new cartesian, a dropped pushdown turns
@@ -19,12 +19,12 @@ from __future__ import annotations
 
 import json
 import os
-import re
 
 import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 LATEST = os.path.join(REPO, "BENCH_local_latest.json")
+BASELINE = "history/BENCH_local_r14_mid.json"
 
 # Noise filter: committed minimum must exceed this for the ratio to mean
 # anything; sub-half-second queries flap 2-3x on scheduler jitter alone.
@@ -32,31 +32,14 @@ MIN_COMMITTED_S = 0.5
 MAX_RATIO = 2.0
 
 
-def _last_committed_record() -> tuple[str, dict] | None:
-    best: tuple[int, str] | None = None
-    for name in os.listdir(REPO):
-        m = re.fullmatch(r"BENCH_local_r(\d+)\.json", name)
-        if m:
-            n = int(m.group(1))
-            if best is None or n > best[0]:
-                best = (n, name)
-    if best is None:
-        return None
-    path = os.path.join(REPO, best[1])
-    with open(path, encoding="utf-8") as fh:
-        return best[1], json.load(fh)
-
-
 def test_no_per_query_bench_regression():
-    committed = _last_committed_record()
-    if committed is None:
-        pytest.skip("no committed BENCH_local_rNN.json to compare against")
-    ref_name, ref = committed
+    ref_path = os.path.join(REPO, BASELINE)
+    with open(ref_path, encoding="utf-8") as fh:
+        ref = json.load(fh)
     if not os.path.exists(LATEST):
         pytest.skip("no BENCH_local_latest.json — run python bench.py")
-    ref_path = os.path.join(REPO, ref_name)
     if os.path.getmtime(LATEST) < os.path.getmtime(ref_path):
-        pytest.skip(f"{LATEST} predates {ref_name} — stale capture")
+        pytest.skip(f"{LATEST} predates {BASELINE} — stale capture")
     with open(LATEST, encoding="utf-8") as fh:
         latest = json.load(fh)
     if latest.get("sf") != ref.get("sf"):
@@ -77,7 +60,7 @@ def test_no_per_query_bench_regression():
         if new_q[q] / ref_q[q] > MAX_RATIO
     )
     assert not regressed, (
-        f"per-query regressions > {MAX_RATIO}x vs {ref_name} "
+        f"per-query regressions > {MAX_RATIO}x vs {BASELINE} "
         "(committed_s, latest_s): "
         + ", ".join(f"{q} ({a:.2f} -> {b:.2f})" for q, a, b in regressed)
     )

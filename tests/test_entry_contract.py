@@ -1,8 +1,5 @@
 """Pins for the driver contract (__spark_entry__): registry completeness and
-the capped-slot rationing order — canaries first, then never-driver-verified
-queries, then verified ones stalest-first. This ordering decides which
-queries receive driver correctness rows each round; a regression here
-silently starves new work of verification."""
+the merge of the two registry modules into one name space."""
 
 from __future__ import annotations
 
@@ -16,49 +13,11 @@ def test_every_query_has_an_oracle():
     assert len(q) >= 119
 
 
-def test_slot_order_canaries_then_unverified_then_stalest():
-    names = list(entry.queries())
-    n_canary = len(entry.CANARIES)
-    assert names[:n_canary] == list(entry.CANARIES)
+def test_registries_do_not_collide():
+    """Every caller merges the two registries with {**Q1, **Q2}, so a name
+    registered in both modules would silently shadow the relational one."""
+    from agent_data_wrangler_spark.queryset import QUERIES as Q1
+    from agent_data_wrangler_spark.queryset_nstar import QUERIES as Q2
 
-    verified = entry.LAST_GREEN_ROUND
-    rest = names[n_canary:]
-    # Block 1: every never-verified query precedes every verified one.
-    flags = [k in verified for k in rest]
-    first_verified = flags.index(True) if True in flags else len(rest)
-    assert all(flags[first_verified:]), "unverified query after verified block"
-    # Block 2: verified queries are ordered stalest (lowest round) first.
-    rounds = [verified[k] for k in rest[first_verified:]]
-    assert rounds == sorted(rounds)
-
-
-def test_slot_window_holds_unverified_and_stalest():
-    """The driver's capped window must spend its slots on (a) the canaries,
-    then (b) never-verified oracle queries — new work gets driver rows before
-    anything re-verifies — then (c) the least-recently-verified queries, so
-    the whole registry keeps cycling through the driver (round-4/5 lessons).
-
-    Overflow policy (round 6, >45 new queries in one round): when the
-    never-verified set alone exceeds the non-canary slots, the window is
-    canaries + a registration-order prefix of the never-verified block;
-    the starved tail (newest additions, all locally parity-tested at
-    sf0.01) gets first claim next round. NOTES_r06.md documents this."""
-    cap = entry.DRIVER_SLOT_CAP
-    names = list(entry.queries())
-    window = names[:cap]
-    unverified = [k for k in names if k not in entry.LAST_GREEN_ROUND]
-    n_canary = len(entry.CANARIES)
-    assert n_canary <= 3, "canaries must stay lean while new work overflows"
-    if len(unverified) >= cap - n_canary:
-        # Overflow: every non-canary slot goes to a never-verified query,
-        # in registration (oldest-first) order.
-        assert window == list(entry.CANARIES) + unverified[: cap - n_canary]
-    else:
-        for q in unverified:
-            assert q in set(window), f"never-verified {q} starved"
-        # the window's verified block must be a prefix of the stalest order
-        verified_in = [k for k in window
-                       if k in entry.LAST_GREEN_ROUND and k not in entry.CANARIES]
-        verified_all = [k for k in names
-                        if k in entry.LAST_GREEN_ROUND and k not in entry.CANARIES]
-        assert verified_in == verified_all[: len(verified_in)]
+    assert not set(Q1) & set(Q2), sorted(set(Q1) & set(Q2))
+    assert len(entry.queries()) == len(Q1) + len(Q2)

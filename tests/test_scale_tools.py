@@ -1,5 +1,6 @@
 """Unit tests for the scale-probe toolchain (tools/gen_sf.py cipher,
-tools/scaling_report.py ratio table) — pure-Python, no Spark session.
+tools/scaling_report.py ratio table, tools/stage_profile.py stage wall time)
+— pure-Python, no Spark session.
 
 The sf10 probe's validity rests on two generator properties (r08 verdict
 item 2): replica vocabularies must be pairwise disjoint (or pairwise
@@ -15,6 +16,7 @@ import json
 import os
 import string
 import sys
+import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -30,6 +32,7 @@ def _load(mod_name: str, rel_path: str):
 
 gen_sf = _load("adw_gen_sf", "tools/gen_sf.py")
 scaling_report = _load("adw_scaling_report", "tools/scaling_report.py")
+stage_profile = _load("adw_stage_profile", "tools/stage_profile.py")
 
 
 def test_cipher_identity_at_replica_zero():
@@ -146,3 +149,20 @@ def test_scaling_report_matches_committed_artifacts(out_name):
     pairs = [(lbl, os.path.join(REPO, rel)) for lbl, rel in pair_specs]
     assert scaling_report.build_report(pairs, footnotes=footnotes) \
         == committed
+
+
+def test_stage_wall_time_is_utc_across_dst(monkeypatch):
+    """REST stamps are UTC: a stage spanning the local spring-forward hour
+    lasts 3600.2 s, not the 0.2 s a local-time parse gives."""
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        wall = stage_profile._stage_wall_s({
+            "firstTaskLaunchedTime": "2026-03-08T01:59:59.900GMT",
+            "completionTime": "2026-03-08T03:00:00.100GMT",
+        })
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert abs(wall - 3600.2) < 1e-6
+    assert stage_profile._stage_wall_s({"completionTime": None}) == 0.0

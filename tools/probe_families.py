@@ -9,7 +9,7 @@ protocol inside each (untimed sf0.001 warmup of the same plan shape, then
 two timed noop-sink passes, min):
 
     python tools/probe_families.py --sf-dir .scratch/sf1 --sf 1.0 \
-        [--families lk1,ss1,...] [--out BENCH_probe_sfN.json] [--passes 2]
+        [--families lk1,ss1,...] [--out history/BENCH_probe_sfN.json] [--passes 2]
 
 Output schema matches bench.py's payload ({"queries": {...}, "sf": N, ...}),
 EXCEPT that "sf" may be a STRING label rather than a number: --sf accepts

@@ -8,8 +8,9 @@ nothing.
 
 Usage:
     python tools/scaling_report.py \
-        --pair sf0.1=BENCH_local_r08.json --pair sf1=BENCH_sf1.json \
-        [--pair sf10=BENCH_sf10.json] [--out SCALING.md]
+        --pair sf0.1=history/BENCH_local_r08.json \
+        --pair sf1=history/BENCH_sf1.json \
+        [--pair sf10=history/BENCH_sf10.json] [--out SCALING.md]
 
 Each --pair is label=path (ordered smallest SF first). For every query
 present in consecutive pairs the report prints t_small, t_big and the ratio;
@@ -104,10 +105,10 @@ COMMITTED_REPORTS: dict[str, tuple[list[tuple[str, str]], list[str] | None]] = {
     # third-decade spot check of the two heaviest (lk1, n5 — r10 verdict
     # item 8; the builder emits only families present in BOTH legs).
     "SCALING.md": (
-        [("sf0.1", "BENCH_probe_sf0.1.json"),
-         ("sf1", "BENCH_probe_sf1.json"),
-         ("sf10", "BENCH_probe_sf10.json"),
-         ("sf30", "BENCH_probe_sf30.json")],
+        [("sf0.1", "history/BENCH_probe_sf0.1.json"),
+         ("sf1", "history/BENCH_probe_sf1.json"),
+         ("sf10", "history/BENCH_probe_sf10.json"),
+         ("sf30", "history/BENCH_probe_sf30.json")],
         [
             "Protocol (r11, verdict item 1): every family runs "
             "in its OWN fresh JVM via tools/probe_families.py (sf0.001 "
@@ -142,8 +143,8 @@ COMMITTED_REPORTS: dict[str, tuple[list[tuple[str, str]], list[str] | None]] = {
     # The skewed-alphabet bl1 probe (r09 verdict item 7): same 10x volume,
     # Zipf-prior ciphers (gen_sf.py --skewed-alphabet).
     "SCALING_skew.md": (
-        [("sf0.1", "BENCH_probe_sf0.1.json"),
-         ("sf1-skew", "BENCH_probe_sf1skew.json")],
+        [("sf0.1", "history/BENCH_probe_sf0.1.json"),
+         ("sf1-skew", "history/BENCH_probe_sf1skew.json")],
         [
             "Skew-mode generator probe (gen_sf.py --skewed-alphabet, "
             "Zipf-prior ciphers): cross-replica hot-token collisions are "
@@ -157,7 +158,8 @@ COMMITTED_REPORTS: dict[str, tuple[list[tuple[str, str]], list[str] | None]] = {
     ),
     # The legacy full-registry pair (r08 code/generator, 210 queries).
     "SCALING_full_registry_sf1.md": (
-        [("sf0.1", "BENCH_local_r08.json"), ("sf1", "BENCH_sf1.json")],
+        [("sf0.1", "history/BENCH_local_r08.json"),
+         ("sf1", "history/BENCH_sf1.json")],
         None,
     ),
 }

@@ -1,10 +1,11 @@
-"""Splice per-family probe captures into the committed BENCH_probe_*.json
-artifacts as FAMILY UNITS (the r13 protocol: a family's ratio legs must be
-temporally adjacent — captured back-to-back in one run — so whole families
-are replaced together; per-leg minima are never mixed across runs).
+"""Splice per-family probe captures into the committed
+history/BENCH_probe_*.json artifacts as FAMILY UNITS (the r13 protocol: a
+family's ratio legs must be temporally adjacent — captured back-to-back in
+one run — so whole families are replaced together; per-leg minima are never
+mixed across runs).
 
 Usage:
-    python tools/splice_probe.py BENCH_probe_sf10.json /tmp/lk1_h_sf10.json ...
+    python tools/splice_probe.py history/BENCH_probe_sf10.json lk1_sf10.json ...
 
 Each donor file is a probe_families.py payload; every query it contains
 replaces the same key in the target artifact, and the target's total

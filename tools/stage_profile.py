@@ -16,6 +16,7 @@ import os
 import sys
 import time
 import urllib.request
+from datetime import datetime
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -24,6 +25,18 @@ sys.path.insert(0, REPO)
 def _rest(base: str, path: str):
     with urllib.request.urlopen(base + path, timeout=10) as fh:
         return json.load(fh)
+
+
+def _stage_wall_s(stage: dict) -> float:
+    """Seconds from a stage's first task launch to its completion (0 when
+    either stamp is missing). The REST stamps (``...T05:40:12.345GMT``) are
+    UTC, so they are subtracted as naive datetimes, never via local time."""
+    start, end = stage.get("firstTaskLaunchedTime"), stage.get("completionTime")
+    if not (start and end):
+        return 0.0
+    a, b = (datetime.strptime(t.removesuffix("GMT"), "%Y-%m-%dT%H:%M:%S.%f")
+            for t in (start, end))
+    return (b - a).total_seconds()
 
 
 def main() -> None:
@@ -66,15 +79,8 @@ def main() -> None:
             for st in attempts:
                 if st.get("status") != "COMPLETE":
                     continue
-                dur = 0.0
-                if st.get("firstTaskLaunchedTime") and st.get("completionTime"):
-                    fmt = "%Y-%m-%dT%H:%M:%S.%f"
-                    a = time.strptime(st["firstTaskLaunchedTime"][:-3], fmt)
-                    b = time.strptime(st["completionTime"][:-3], fmt)
-                    dur = (time.mktime(b) + float(st["completionTime"][20:23]) / 1000
-                           - time.mktime(a) - float(st["firstTaskLaunchedTime"][20:23]) / 1000)
                 rows.append((
-                    sid, dur, st["executorRunTime"] / 1000.0,
+                    sid, _stage_wall_s(st), st["executorRunTime"] / 1000.0,
                     st["numCompleteTasks"],
                     st["inputBytes"], st["shuffleReadBytes"],
                     st["shuffleWriteBytes"],

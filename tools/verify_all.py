@@ -1,7 +1,7 @@
 """One-command replica of the verify recipe (.claude/skills/verify):
 
 1. driver contract on a VANILLA session (entry + registry sizes),
-2. oracle parity at sf0.001 and sf0.01 (plus the LAST_GREEN_ROUND staleness check),
+2. oracle parity at sf0.001 and sf0.01,
 3. (optional, --bench) the sf0.1 bench.
 
 Usage: python tools/verify_all.py [--bench]
@@ -29,10 +29,6 @@ def run(desc: str, cmd: list[str], env: dict | None = None) -> bool:
 
 def main() -> int:
     ok = run(
-        "green-map freshness (tools/refresh_green.py --check)",
-        [sys.executable, "tools/refresh_green.py", "--check"],
-    )
-    ok &= run(
         "driver contract (vanilla session)",
         [
             sys.executable,
