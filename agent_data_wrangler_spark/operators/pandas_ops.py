@@ -44,10 +44,13 @@ def scalar_pandas_udf(fn: Callable[..., pd.Series], return_type: str):
 def grouped_agg_pandas_udf(fn: Callable[..., object], return_type: str):
     """Grouped-aggregate UDF: ``fn(pd.Series, ...) -> scalar``; usable in
     ``groupBy().agg`` and unbounded windows. Partial aggregation does NOT
-    apply (whole group ships to Python) — keep groups bounded."""
-    from pyspark.sql.functions import PandasUDFType
+    apply (whole group ships to Python) — keep groups bounded. The
+    Series-in/scalar-out type hints select the grouped-agg eval type."""
 
-    return pandas_udf(fn, returnType=return_type, functionType=PandasUDFType.GROUPED_AGG)
+    def agg(*cols: pd.Series) -> float:
+        return fn(*cols)
+
+    return pandas_udf(agg, returnType=return_type)
 
 
 def grouped_transform(

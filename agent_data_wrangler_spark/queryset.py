@@ -35,6 +35,7 @@ from agent_data_wrangler_spark.operators import (
     transform,
     windows,
 )
+from agent_data_wrangler_spark.plans.derived import staged
 from agent_data_wrangler_spark.sources.readers import read_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1747,45 +1748,34 @@ def u4_udtf_tokens_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Staged export-roundtrip cache, one write per (sf_dir, fmt) per session —
-# the _PARTITIONED_EVENTS convention: registered queries are invoked many
-# times per session (plan sweeps, bench passes), and re-exporting the table
-# each call both redoes the IO and leaks a temp directory per invocation.
-_STAGED_ROUNDTRIP: dict[tuple[str, str], str] = {}
-
-
 def _staged_export(
     spark: SparkSession, sf_dir: str, fmt: str, filename: str,
     spread: bool = False,
 ) -> str:
+    """Events exported through the versioned sink as ``fmt``, staged once
+    per session and source identity (:func:`derived.staged`)."""
     import os
-    import tempfile
 
     from agent_data_wrangler_spark.sources.readers import widen_scan
     from agent_data_wrangler_spark.sources.writers import write_versioned
 
-    key = (sf_dir, fmt)
-    cached = _STAGED_ROUNDTRIP.get(key)
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    ev = read_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", "value"
-    )
-    if spread:
-        # r14-opt: export as cores-many files instead of one, so the
-        # re-read's schema-INFERENCE pass (the declared verified surface of
-        # the roundtrip queries — it must stay) and the parse both
-        # parallelize; a one-file XML export made xm1's inference a 3 s
-        # single-task stage. Opt-in per format: xm1's aggregates are exact
-        # integers, while the CSV/JSON roundtrips sum raw doubles whose
-        # partial-sum order the single-file layout keeps deterministic.
-        ev = widen_scan(ev)
-    out = write_versioned(
-        ev, os.path.join(tempfile.mkdtemp(prefix=f"adw_{fmt}_"), filename),
-        fmt=fmt,
-    )
-    _STAGED_ROUNDTRIP[key] = out
-    return out
+    def build(base: str) -> str:
+        ev = read_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", "event_type", "value"
+        )
+        if spread:
+            # r14-opt: export as cores-many files instead of one, so the
+            # re-read's schema-INFERENCE pass (the declared verified surface
+            # of the roundtrip queries — it must stay) and the parse both
+            # parallelize; a one-file XML export made xm1's inference a 3 s
+            # single-task stage. Opt-in per format: xm1's aggregates are
+            # exact integers, while the CSV/JSON roundtrips sum raw doubles
+            # whose partial-sum order the single-file layout keeps
+            # deterministic.
+            ev = widen_scan(ev)
+        return write_versioned(ev, os.path.join(base, filename), fmt=fmt)
+
+    return staged(sf_dir, ("events",), (fmt, filename, spread), build)
 
 
 # ---------------------------------------------------------------------------
@@ -2174,21 +2164,16 @@ def bk1_bucketed_join_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 # partition-by-ingest-date/type is the first-line defense before any row
 # filter runs. Oracle: the same filter on the unpartitioned original.
 # ---------------------------------------------------------------------------
-_PARTITIONED_EVENTS: dict[str, str] = {}
-
-
 def _partitioned_events(spark: SparkSession, sf_dir: str) -> str:
-    cached = _PARTITIONED_EVENTS.get(sf_dir)
     import os
-    import tempfile
 
-    if cached is not None and os.path.isdir(cached):
-        return cached
-    ev = read_table(spark, sf_dir, "events")
-    out = os.path.join(tempfile.mkdtemp(prefix="adw_part_"), "events_by_type")
-    ev.write.partitionBy("event_type").parquet(out)
-    _PARTITIONED_EVENTS[sf_dir] = out
-    return out
+    def build(base: str) -> str:
+        out = os.path.join(base, "events_by_type")
+        read_table(spark, sf_dir, "events").write.partitionBy(
+            "event_type").parquet(out)
+        return out
+
+    return staged(sf_dir, ("events",), ("part",), build)
 
 
 @query(
@@ -2282,28 +2267,22 @@ def js1_jsonl_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 # as 'UNKNOWN'. Oracle: the same reconstruction from the original table.
 # Staged once per sf_dir.
 # ---------------------------------------------------------------------------
-_EVOLVED_ORDERS: dict[str, tuple[str, str]] = {}
-
-
 def _evolved_orders(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     import os
-    import tempfile
 
-    cached = _EVOLVED_ORDERS.get(sf_dir)
-    if cached is not None and all(os.path.isdir(p) for p in cached):
-        return cached
-    o = read_table(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="adw_evolve_")
-    v1 = os.path.join(base, "v1")
-    v2 = os.path.join(base, "v2")
-    o.filter(F.year("o_orderdate") == 1996).select(
-        "o_orderkey", "o_totalprice"
-    ).write.parquet(v1)
-    o.filter(F.year("o_orderdate") == 1997).select(
-        "o_orderkey", "o_totalprice", "o_orderpriority"
-    ).write.parquet(v2)
-    _EVOLVED_ORDERS[sf_dir] = (v1, v2)
-    return v1, v2
+    def build(base: str) -> tuple[str, str]:
+        o = read_table(spark, sf_dir, "orders")
+        v1 = os.path.join(base, "v1")
+        v2 = os.path.join(base, "v2")
+        o.filter(F.year("o_orderdate") == 1996).select(
+            "o_orderkey", "o_totalprice"
+        ).write.parquet(v1)
+        o.filter(F.year("o_orderdate") == 1997).select(
+            "o_orderkey", "o_totalprice", "o_orderpriority"
+        ).write.parquet(v2)
+        return v1, v2
+
+    return staged(sf_dir, ("orders",), ("evolve",), build)
 
 
 @query(

@@ -833,3 +833,30 @@ def test_minhash_verify_equals_exact_semijoin(spark):
             ).collect()
         }
         assert got_inc == got_inc_semi
+
+
+def test_n8_plane_count_uses_the_planted_union_size(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """n8 plants ``limit(_N8_PLANT)`` copies, so a table with fewer rows
+    than the plant size plants one copy per row: 10 embeddings make a
+    20-row union, and the LSH plane count must be derived from 20."""
+    from agent_data_wrangler_spark.queryset_nstar import QUERIES
+    from agent_data_wrangler_spark.sources.readers import read_table
+
+    read_table(spark, sf_dir, "embeddings").orderBy("vec_id").limit(10) \
+        .coalesce(1).write.parquet(str(tmp_path / "embeddings.parquet"))
+
+    class _Stop(Exception):
+        pass
+
+    seen = []
+
+    def capture(n, *args, **kwargs):
+        seen.append(n)
+        raise _Stop
+
+    monkeypatch.setattr(similarity, "derive_lsh_params", capture)
+    with pytest.raises(_Stop):
+        QUERIES["n8_embedding_neardup_pairs"](spark, str(tmp_path))
+    assert seen == [20]

@@ -3,6 +3,8 @@ gr1/tr1/rx1 (r09 directive: their decade ratios grew because each query
 re-derived the orders⋈lineitem pair expansion per invocation)."""
 
 import os
+import shutil
+import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,12 +15,19 @@ from agent_data_wrangler_spark.sources.readers import read_table
 
 @pytest.fixture(autouse=True)
 def _fresh_memo():
-    """Each test sees a clean memo, and never poisons another test's."""
+    """Each test sees clean memos, and never poisons another test's; the
+    scratch layouts a test staged are removed with its memo entries."""
     saved = dict(derived._TRADE_GRAPH)
+    saved_staged = dict(derived._STAGED)
     derived._TRADE_GRAPH.clear()
+    derived._STAGED.clear()
     yield
     derived._TRADE_GRAPH.clear()
     derived._TRADE_GRAPH.update(saved)
+    for _ident, base, _value in derived._STAGED.values():
+        shutil.rmtree(base, ignore_errors=True)
+    derived._STAGED.clear()
+    derived._STAGED.update(saved_staged)
 
 
 def test_rollup_matches_direct_derivation(spark, sf_dir):
@@ -125,13 +134,12 @@ def test_graph_queries_scan_the_rollup(spark, sf_dir):
     """gr1/tr1/rx1's 100 TB claim: after the one-time build, their plans
     scan the small materialized edge tables — lineitem never reappears in
     a per-query plan."""
-    from agent_data_wrangler_spark.queryset import QUERIES as Q1
-    from agent_data_wrangler_spark.queryset_nstar import QUERIES as Q2
+    from __spark_entry__ import queries
 
     derived.trade_graph_tables(spark, str(sf_dir))  # pay the build once
     for name in ("tr1_triangle_count", "rx1_recursive_reachability",
                  "dg1_cosupply_rollup_topk", "dg2_trade_edges_checksum"):
-        q = {**Q1, **Q2}[name]
+        q = queries()[name]
         df = q(spark, str(sf_dir))
         plan = df._jdf.queryExecution().executedPlan().toString()
         # tr1's plan text carries the rollup path in its cached subtrees;
@@ -155,3 +163,68 @@ def test_dg1_is_topk_heap_over_rollup(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan, plan
     assert "Join" not in plan, plan
     assert "lineitem" not in plan, plan
+
+
+def test_staged_layouts_rebuild_on_source_rewrite(spark, sf_dir, tmp_path):
+    """A staged scratch layout is reused only while its source keeps its
+    file identity: rewriting events.parquet in place (same path, half the
+    rows) must make csv1's export and pp1's partitioned copy rebuild, and
+    the rebuild REPLACES the memo entry instead of adding one."""
+    import pyarrow.parquet as pq
+
+    from __spark_entry__ import queries
+
+    src = tmp_path / "sf"
+    src.mkdir()
+    events = src / "events.parquet"
+    shutil.copy(os.path.join(str(sf_dir), "events.parquet"), events)
+    csv1 = queries()["csv1_roundtrip_events"]
+    pp1 = queries()["pp1_partition_pruned_events"]
+
+    def seen() -> tuple[int, int]:
+        n_rows = sum(r["n"] for r in csv1(spark, str(src)).collect())
+        return n_rows, pp1(spark, str(src)).first()["n"]
+
+    def expected(n_rows: int) -> tuple[int, int]:
+        ev = read_table(spark, str(src), "events")
+        assert ev.count() == n_rows
+        return n_rows, ev.filter(F.col("event_type") == "purchase").count()
+
+    table = pq.read_table(events)
+    assert seen() == expected(table.num_rows)
+    n_entries = len(derived._STAGED)
+
+    half = table.slice(0, table.num_rows // 2)
+    pq.write_table(half, events)
+    assert seen() == expected(half.num_rows)
+    assert len(derived._STAGED) == n_entries
+    assert sorted(kind[0] for kind, d in derived._STAGED
+                  if d == str(src)) == ["csv", "part"]
+
+
+def test_staged_export_keys_every_build_parameter(spark, sf_dir):
+    """Two exports of one format that differ only in ``spread`` are two
+    layouts — neither may be served the other's files."""
+    from agent_data_wrangler_spark.queryset import _staged_export
+
+    plain = _staged_export(spark, str(sf_dir), "xml", "events.xml")
+    spread = _staged_export(spark, str(sf_dir), "xml", "events.xml",
+                            spread=True)
+    assert os.path.dirname(plain) != os.path.dirname(spread)
+    assert _staged_export(spark, str(sf_dir), "xml", "events.xml") == plain
+    assert len(derived._STAGED) == 2
+
+
+def test_staged_dirs_are_adw_scratch(spark, sf_dir):
+    """Staged layouts live in ``adw_*`` dirs directly under the temp dir
+    or /dev/shm — where the temp sweeps and leftover ledgers look."""
+    from agent_data_wrangler_spark.queryset import _partitioned_events
+    from agent_data_wrangler_spark.queryset_nstar import _staged_events
+
+    _partitioned_events(spark, str(sf_dir))
+    _staged_events(spark, str(sf_dir))
+    roots = {os.path.realpath(tempfile.gettempdir()), "/dev/shm"}
+    assert len(derived._STAGED) == 2
+    for _ident, base, _value in derived._STAGED.values():
+        assert os.path.basename(base).startswith("adw_"), base
+        assert os.path.realpath(os.path.dirname(base)) in roots, base

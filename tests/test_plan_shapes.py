@@ -7,20 +7,21 @@ from __future__ import annotations
 
 import pytest
 
+from __spark_entry__ import queries
 from agent_data_wrangler_spark.operators import similarity as similarity_ops
-from agent_data_wrangler_spark.queryset import QUERIES as Q1
-from agent_data_wrangler_spark.queryset_nstar import QUERIES as Q2
+
+QUERIES = queries()
 
 
 def _plan(spark, name, sf_dir) -> str:
-    q = {**Q1, **Q2}[name]
+    q = QUERIES[name]
     return q(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
 
 
 def _final_plan(spark, name, sf_dir) -> str:
     """Execute, then read the finalized adaptive plan (codegen annotations
     only appear once AQE has finalized stages)."""
-    q = {**Q1, **Q2}[name]
+    q = QUERIES[name]
     df = q(spark, sf_dir)
     df.collect()  # a write would spawn its own execution; collect finalizes THIS one
     return df._jdf.queryExecution().executedPlan().toString()
@@ -94,7 +95,7 @@ def all_query_plans(spark, sf_dir):
             "st5_incremental_rollup_events", "st6_stateful_user_totals"}
     return {
         name: q(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        for name, q in {**Q1, **Q2}.items()
+        for name, q in QUERIES.items()
         if name not in skip
     }
 

@@ -74,6 +74,19 @@ def test_grouped_agg_pandas_udf(spark):
     assert rows["b"] == pytest.approx(3.0)
 
 
+def test_grouped_agg_pandas_udf_is_not_deprecated(spark):
+    """The UDF's eval type comes from type hints, not the deprecated
+    PandasUDFType argument (which emits a UserWarning on construction)."""
+    import warnings
+
+    from pyspark.util import PythonEvalType
+
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        mean = grouped_agg_pandas_udf(lambda s: float(s.mean()), "double")
+    assert mean.evalType == PythonEvalType.SQL_GROUPED_AGG_PANDAS_UDF
+
+
 def test_grouped_transform_schema_and_values(spark):
     def demean(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.copy()

@@ -6,10 +6,9 @@ from __future__ import annotations
 
 import os
 
-from agent_data_wrangler_spark.queryset import QUERIES as Q1
-from agent_data_wrangler_spark.queryset_nstar import QUERIES as Q2
+from __spark_entry__ import queries
 
-QUERIES = {**Q1, **Q2}
+QUERIES = queries()
 
 
 def _stage(spark, tmp_path, name, df):

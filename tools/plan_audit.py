@@ -33,10 +33,9 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from agent_data_wrangler_spark.queryset import QUERIES as Q1
-    from agent_data_wrangler_spark.queryset_nstar import QUERIES as Q2
+    import __spark_entry__ as entry
 
-    queries = {**Q1, **Q2}
+    queries = entry.queries()
     features = (
         ("Exchange hashpartitioning", "shuf"),
         ("Exchange SinglePartition", "single"),
