@@ -15,6 +15,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from agent_data_wrangler_spark.operators import fits
+
 
 def global_stats(df: DataFrame, column: str) -> DataFrame:
     """A1: count/mean/std(sample)/min/max/median for one column, one pass."""
@@ -41,7 +43,8 @@ def null_count_agg(df: DataFrame, column: str) -> Column:
 
 def correlation(df: DataFrame, c1: str, c2: str) -> float:
     """A7: Pearson correlation (sample, matching pandas/DuckDB corr)."""
-    return df.agg(F.corr(F.col(c1).cast("double"), F.col(c2).cast("double"))).first()[0]
+    return fits.collect_fit(
+        df.agg(F.corr(F.col(c1).cast("double"), F.col(c2).cast("double"))))[0][0]
 
 
 def seeded_sample(df: DataFrame, fraction: float, seed: int = 42) -> DataFrame:

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from agent_data_wrangler_spark.operators import fits
+
 
 def drop_null_rows(df: DataFrame, subset: list[str] | None = None, how: str = "any") -> DataFrame:
     """F1: drop rows with nulls in ``subset`` (pandas ``dropna`` semantics)."""
@@ -32,7 +34,7 @@ def fit_sigma_bounds(df: DataFrame, columns: list[str], k: float = 3.0) -> dict[
     for c in columns:
         col = F.col(c).cast("double")
         aggs.extend([F.avg(col).alias(f"{c}__mean"), F.stddev_samp(col).alias(f"{c}__std")])
-    row = df.agg(*aggs).first()
+    row = fits.collect_fit(df.agg(*aggs))[0]
     bounds = {}
     for c in columns:
         mean, std = row[f"{c}__mean"], row[f"{c}__std"]
@@ -73,10 +75,11 @@ def fit_mad_bounds(
     which is the entire premise of a cleaning engine.
     """
     col = F.col(column).cast("double")
-    med = df.agg(F.percentile(col, 0.5)).first()[0]
+    med = fits.collect_fit(df.agg(F.percentile(col, 0.5)))[0][0]
     if med is None:
         return (float("-inf"), float("inf"))
-    mad = df.agg(F.percentile(F.abs(col - F.lit(med)), 0.5)).first()[0]
+    mad = fits.collect_fit(
+        df.agg(F.percentile(F.abs(col - F.lit(med)), 0.5)))[0][0]
     if mad is None:
         return (float("-inf"), float("inf"))
     half = k * _MAD_SCALE * mad

@@ -26,30 +26,33 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from agent_data_wrangler_spark.operators import fits
+
 
 def fit_median(df: DataFrame, columns: list[str]) -> dict[str, float]:
-    row = df.agg(
+    row = fits.collect_fit(df.agg(
         *[F.percentile(F.col(c).cast("double"), 0.5).alias(c) for c in columns]
-    ).first()
+    ))[0]
     return {c: row[c] for c in columns}
 
 
 def fit_mean(df: DataFrame, columns: list[str]) -> dict[str, float]:
-    row = df.agg(*[F.avg(F.col(c).cast("double")).alias(c) for c in columns]).first()
+    row = fits.collect_fit(
+        df.agg(*[F.avg(F.col(c).cast("double")).alias(c) for c in columns]))[0]
     return {c: row[c] for c in columns}
 
 
 def fit_mode(df: DataFrame, column: str):
     """Deterministic mode: highest count, ties broken by ascending value
     (nulls excluded, as in pandas ``Series.mode``)."""
-    row = (
+    rows = fits.collect_fit(
         df.filter(F.col(column).isNotNull())
         .groupBy(column)
         .agg(F.count(F.lit(1)).alias("cnt"))
         .orderBy(F.desc("cnt"), F.asc(column))
-        .first()
+        .limit(1)
     )
-    return None if row is None else row[column]
+    return rows[0][column] if rows else None
 
 
 def fill_with(df: DataFrame, values: dict) -> DataFrame:
@@ -81,7 +84,7 @@ def fill_mode(df: DataFrame, columns: list[str]) -> DataFrame:
 def fill_min_of(df: DataFrame, target: str, source: str) -> DataFrame:
     """T4: fill nulls in ``target`` with min(``source``) — the reference's
     "earliest join_date as never-promoted placeholder"."""
-    v = df.agg(F.min(source)).first()[0]
+    v = fits.collect_fit(df.agg(F.min(source)))[0][0]
     return fill_with(df, {target: v})
 
 
@@ -101,9 +104,9 @@ def outliers_to_null(df: DataFrame, columns: list[str], k: float = 3.0) -> DataF
 
 def cap_percentile(df: DataFrame, columns: list[str], p: float = 0.95) -> DataFrame:
     """T6: winsorize from above at the p-th percentile (exact percentile)."""
-    row = df.agg(
+    row = fits.collect_fit(df.agg(
         *[F.percentile(F.col(c).cast("double"), p).alias(c) for c in columns]
-    ).first()
+    ))[0]
     out = df
     for c in columns:
         cap = row[c]

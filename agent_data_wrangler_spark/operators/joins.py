@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from agent_data_wrangler_spark.operators import fits
+
 
 def equi_join(
     left: DataFrame,
@@ -192,7 +194,7 @@ def range_join(
     enum = _epoch_num(right, right_end)
 
     if bucket == "auto":
-        width = right.agg(F.avg(enum - snum)).first()[0]
+        width = fits.collect_fit(right.agg(F.avg(enum - snum)))[0][0]
         if width is None or width <= 0:
             raise ValueError("range_join: cannot auto-size buckets (empty right side or empty intervals)")
     else:

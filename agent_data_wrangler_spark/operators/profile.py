@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from agent_data_wrangler_spark.operators import fits
+
 
 def numeric_columns(df: DataFrame) -> list[str]:
     """Exact type check (not simpleString prefixes — 'int' would also match
@@ -39,7 +41,7 @@ def numeric_columns(df: DataFrame) -> list[str]:
 
 def shape(df: DataFrame) -> tuple[int, int]:
     """P2: (rows, cols)."""
-    return df.count(), len(df.columns)
+    return fits.collect_fit(df.agg(F.count(F.lit(1))))[0][0], len(df.columns)
 
 
 def head(df: DataFrame, n: int = 5) -> DataFrame:
@@ -132,7 +134,7 @@ def _exact_quartiles_bracketed(
                 col, F.array(*[F.lit(p) for p in bracket_ps]), F.lit(accuracy)
             ).alias(f"__br{i}"),
         ])
-    one = df.agg(*aggs).collect()[0]
+    one = fits.collect_fit(df.agg(*aggs))[0]
     if any(int(one[f"__nan{i}"] or 0) > 0 for i in range(len(cols))):
         return None  # NaN sorts above +inf in the exact aggregate; fall back
     n_max = max(int(one[f"__n{i}"]) for i in range(len(cols))) if cols else 0
@@ -172,7 +174,7 @@ def _exact_quartiles_bracketed(
                         )
                     ).alias(f"{tag}_mid"),
                 ])
-    two = df.agg(*p2_aggs).collect()[0] if p2_aggs else None
+    two = fits.collect_fit(df.agg(*p2_aggs))[0] if p2_aggs else None
     rows: list[tuple] = []
     for i, c in enumerate(cols):
         n = int(one[f"__n{i}"])
@@ -369,24 +371,31 @@ def duplicate_row_count(df: DataFrame, subset: list[str] | None = None) -> int:
     sum(count) - n_groups — the previous count + dropDuplicates().count()
     form scanned the table twice for the same integers (r13-opt)."""
     cols = subset or df.columns
-    row = (
+    row = fits.collect_fit(
         df.groupBy(*cols)
         .agg(F.count(F.lit(1)).alias("__c"))
         .agg(
             F.coalesce(F.sum("__c"), F.lit(0)).alias("__total"),
             F.count(F.lit(1)).alias("__distinct"),
         )
-        .collect()[0]
-    )
+    )[0]
     return int(row["__total"]) - int(row["__distinct"])
 
 
 @dataclass
 class TableProfile:
-    """P7: the ``basic_info`` catalog cache (reference: system.txt:2) — computed
-    once per source version, reused across pipeline stages instead of
-    re-profiling (reference: tool_call_agent.py:143-145 mandates not repeating
-    exploration)."""
+    """P7: the ``basic_info`` catalog cache (reference: system.txt:2; not
+    repeating exploration is mandated by tool_call_agent.py:143-145).
+
+    ``of`` runs its aggregate through :func:`fits.collect_fit`, so within one
+    SparkSession the profile job runs once per source version: a repeat
+    ``of`` on a frame with the same optimized plan over the same files, each
+    with unchanged (mtime, size), is served from the bounded fit memo
+    without a Spark job. Anything else re-runs the job: a rewritten source
+    file, a new session, a cached, RDD-backed or non-file input, a
+    non-deterministic plan, or an entry evicted at ``fits.CAPACITY``. The
+    returned object itself is a plain snapshot; callers hold it as long as
+    they like."""
 
     n_rows: int
     n_cols: int
@@ -400,13 +409,13 @@ class TableProfile:
         # the same job (the previous shape() + null_counts() pair scanned
         # the table twice for numbers one partial+final aggregate
         # produces; r13-opt, guide §1.2 "don't compute things twice").
-        row = df.agg(
+        row = fits.collect_fit(df.agg(
             F.count(F.lit(1)).alias("__n_rows"),
             *[
                 F.sum(F.col(c).isNull().cast("bigint")).alias(f"__null_{i}")
                 for i, c in enumerate(df.columns)
             ],
-        ).collect()[0]
+        ))[0]
         nulls = {
             c: int(row[f"__null_{i}"] or 0) for i, c in enumerate(df.columns)
         }

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from agent_data_wrangler_spark.operators import fits
+
 
 def ranked(
     df: DataFrame,
@@ -172,9 +174,9 @@ def distributed_prefix_sums(
     if len(value_cols) != len(aliases):
         raise ValueError("value_cols and aliases must pair up")
     keys = list(partition_by or [])
-    bounds = df.agg(
+    bounds = fits.collect_fit(df.agg(
         F.min(order_col).alias("lo"), F.max(order_col).alias("hi")
-    ).first()
+    ))[0]
     if bounds["lo"] is None:
         out = df
         for alias in aliases:

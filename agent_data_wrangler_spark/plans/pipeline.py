@@ -14,9 +14,15 @@ Reference behaviour being re-expressed:
 Scale notes: the runner adds NO extra Spark jobs unless ``count_rows=True``
 (row counts are real actions — at 100 TB each count is a full scan unless the
 stage output is cached, so the default is off and the golden-replay tests
-opt in at fixture scale). Stage composition is lazy: the whole pipeline
+opt in at fixture scale). Each count is a one-row fit through
+``fits.collect_fit``: a repeat run on unchanged sources, or a stage whose
+count plan equals an earlier one (a projection-only stage), is served from
+the fit memo. Stage composition is lazy: the whole pipeline
 collapses into ONE logical plan that Catalyst optimizes end-to-end —
-filters written in stage 5 still push down into the stage-1 scan.
+filters written in stage 5 still push down into the stage-1 scan. So a
+``stage_end`` event's ``seconds`` times the stage's COMPOSITION, including
+any eager fit the stage runs (sigma bounds, percentile caps), not its
+execution and not its row count.
 """
 
 from __future__ import annotations
@@ -27,6 +33,9 @@ from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
+
+from agent_data_wrangler_spark.operators import fits
 
 
 def default_registry() -> dict:
@@ -178,21 +187,27 @@ class Pipeline:
                 with open(self.log_path, "a", encoding="utf-8") as fh:
                     fh.write(json.dumps(event, default=str) + "\n")
 
+        def count(frame: DataFrame) -> int | None:
+            if not self.count_rows:
+                return None
+            return fits.collect_fit(frame.agg(F.count(F.lit(1))))[0][0]
+
         emit({"event": "pipeline_start", "pipeline": self.name, "n_stages": len(self.stages)})
         current = df
-        rows = current.count() if self.count_rows else None
+        rows = count(current)
         for stage in self.stages:
             emit({"event": "stage_start", "stage": stage.name, "params": stage.params})
             t0 = time.perf_counter()
             current = stage.apply(current)
-            out_rows = current.count() if self.count_rows else None
+            seconds = round(time.perf_counter() - t0, 3)
+            out_rows = count(current)
             emit(
                 {
                     "event": "stage_end",
                     "stage": stage.name,
                     "rows_in": rows,
                     "rows_out": out_rows,
-                    "seconds": round(time.perf_counter() - t0, 3),
+                    "seconds": seconds,
                 }
             )
             rows = out_rows

@@ -1642,6 +1642,8 @@ def pl2_pipeline_event_log_events(spark: SparkSession, sf_dir: str) -> DataFrame
     import os
     import tempfile
 
+    from pyspark.sql.types import LongType, StringType, StructField, StructType
+
     from agent_data_wrangler_spark.plans.pipeline import Pipeline
     from agent_data_wrangler_spark.sources.readers import read_jsonl
 
@@ -1651,13 +1653,15 @@ def pl2_pipeline_event_log_events(spark: SparkSession, sf_dir: str) -> DataFrame
     pipe = Pipeline.from_spec(
         "pl2_clean_events", _PL1_SPEC, count_rows=True, log_path=log_path)
     pipe.run(ev)
-    log = read_jsonl(spark, log_path)
-    return log.select(
-        F.col("event"),
-        F.col("stage").cast("string").alias("stage"),
-        F.col("rows_in").cast("bigint").alias("rows_in"),
-        F.col("rows_out").cast("bigint").alias("rows_out"),
-    )
+    # The replay reads the four traced fields under their declared types:
+    # schema inference would be a Spark job on every call, because each
+    # call writes a fresh log.
+    return read_jsonl(spark, log_path, schema=StructType([
+        StructField("event", StringType()),
+        StructField("stage", StringType()),
+        StructField("rows_in", LongType()),
+        StructField("rows_out", LongType()),
+    ]))
 
 
 # ---------------------------------------------------------------------------

@@ -1803,6 +1803,11 @@ FROM m GROUP BY source
 """
 
 
+#: gq1's mean type: 18 digits hold dup2/top1 (6 digits) exactly and round
+#: each mlen once per row; 20 integer digits leave any sum room.
+_GQ1_DEC = "decimal(38,18)"
+
+
 @query("gq1_repetition_quality_documents", oracle=_GQ1_ORACLE)
 def gq1_repetition_quality_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agent_data_wrangler_spark.functions.text import (
@@ -1818,10 +1823,7 @@ def gq1_repetition_quality_documents(spark: SparkSession, sf_dir: str) -> DataFr
     # r14-opt: the four per-row quality metrics (ngram dup fraction, top
     # token fraction, token stats) ran inside one single-task scan stage
     # on the one-split local file (stage-profiled 1.75 s). widen_scan
-    # floors parallelism at cores (no-op at scale). The per-source avgs
-    # are rounded to 6 digits, which absorbs the ~1e-16-relative partial-
-    # sum reordering; counts/int sums are exact. Parity re-proven at both
-    # small SFs after the change.
+    # floors parallelism at cores (no-op at scale).
     per_doc = widen_scan(d.select("source", "text")).select(
         "source",
         dup_ngram_fraction("text", n=2).alias("dup2"),
@@ -1829,11 +1831,22 @@ def gq1_repetition_quality_documents(spark: SparkSession, sf_dir: str) -> DataFr
         mean_token_len("text").alias("mlen"),
         bpe_ish_token_count("text").alias("bpe"),
     )
+    return _gq1_rollup(per_doc)
+
+
+def _gq1_rollup(per_doc: DataFrame) -> DataFrame:
+    """gq1's per-source rollup. The metric means average DECIMAL casts: a
+    decimal sum is exact, so the mean (and its 6-digit round) is the same
+    whatever the partitioning widen_scan derives from the core count; a
+    double avg adds partial sums in partition order."""
+    def mean6(c: str):
+        return F.round(F.avg(F.col(c).cast(_GQ1_DEC)).cast("double"), 6)
+
     return per_doc.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.round(F.avg("dup2"), 6).alias("avg_dup_bigram"),
-        F.round(F.avg("top1"), 6).alias("avg_top_token"),
-        F.round(F.avg("mlen"), 6).alias("avg_token_len"),
+        mean6("dup2").alias("avg_dup_bigram"),
+        mean6("top1").alias("avg_top_token"),
+        mean6("mlen").alias("avg_token_len"),
         F.sum("bpe").cast("bigint").alias("total_bpe_tokens"),
         F.count_if(
             (F.col("dup2") <= 0.4) & (F.col("top1") <= 0.2)

@@ -510,3 +510,30 @@ def test_fw1_funnel_monotone_and_chained(spark, sf_dir):
         assert 0 < r["docs_out"] <= r["docs_in"]
     # stage 1 must actually dedup on this corpus (12 variants per resource)
     assert rows[0]["docs_out"] < rows[0]["docs_in"]
+
+
+def test_gq1_rollup_is_partition_layout_invariant(spark, sf_dir):
+    """gq1's per-source means come out bit-identical whatever partitioning
+    the per-doc rows arrive in (widen_scan derives it from the core count)."""
+    from agent_data_wrangler_spark.functions.text import (
+        dup_ngram_fraction,
+        mean_token_len,
+        top_token_fraction,
+    )
+    from agent_data_wrangler_spark.queryset_nstar import _gq1_rollup
+    from agent_data_wrangler_spark.sources.readers import read_table
+
+    per_doc = read_table(spark, str(sf_dir), "documents").select(
+        "source",
+        dup_ngram_fraction("text", n=2).alias("dup2"),
+        top_token_fraction("text").alias("top1"),
+        mean_token_len("text").alias("mlen"),
+        F.length("text").alias("bpe"),
+    ).cache()
+    try:
+        one, seven = (
+            sorted(_gq1_rollup(per_doc.repartition(n)).collect())
+            for n in (1, 7))
+        assert one and one == seven
+    finally:
+        per_doc.unpersist()
