@@ -31,19 +31,12 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from agent_data_wrangler_spark.functions.text import tokens
+from agent_data_wrangler_spark.operators.held import held
+from agent_data_wrangler_spark.sources.readers import widen_scan
 
 #: Modulus for the minhash permutation family — Mersenne prime 2^31-1.
 #: Keeps a*x+b inside int64 under ANSI mode (a,x < 2^31 → a*x < 2^62).
 _MERSENNE_31 = 2_147_483_647
-
-
-def _widen(df: DataFrame) -> DataFrame:
-    """Repartition up to the session's default parallelism when the input has
-    fewer partitions than cores (no-op at real scale) — shared helper, see
-    sources/readers.py widen_scan."""
-    from agent_data_wrangler_spark.sources.readers import widen_scan
-
-    return widen_scan(df)
 
 
 def _lcg_params(num_hashes: int, seed: int = 42) -> list[tuple[int, int]]:
@@ -103,7 +96,7 @@ def shingle_frame(
     re-derives shingles from raw text in its own scan (measured: the n5+n12
     verdict queries spent ~2x their text-scan budget on repeated shingling).
     """
-    return _widen(df).select(
+    return widen_scan(df).select(
         F.col(id_col).alias("__id"), shingles(text_col, k).alias("__sh")
     )
 
@@ -211,7 +204,7 @@ def minhash_signatures(
                 "__id",
                 minhash_signature(F.col("__sh"), num_hashes, seed).alias("__sig"),
             )
-        return _widen(df).select(
+        return widen_scan(df).select(
             F.col(id_col).alias("__id"),
             minhash_signature(shingles(text_col, k), num_hashes, seed).alias("__sig"),
         )
@@ -224,7 +217,7 @@ def minhash_signatures(
         # tree, so the named-column Generate caveat below does not apply.
         hashed = shingles_df.select("__id", F.explode_outer("__sh").alias("__s"))
     else:
-        hashed = _widen(df).select(
+        hashed = widen_scan(df).select(
             F.col(id_col).alias("__id"),
             # explode_outer keeps empty-shingle docs as a null hash row, so
             # they surface in the aggregate and receive the all-P sentinel
@@ -376,24 +369,16 @@ def near_dup_pairs_minhash(
     this is the cheap side of the trade at any scale; production dedup
     pipelines write this boundary out for the same reason.
     """
-    from pyspark import StorageLevel
-
-    cands = near_dup_candidates(
-        df, id_col, text_col, k=k, num_hashes=num_hashes, bands=bands, seed=seed,
-        shingles_df=shingles_df,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    cands.count()  # materialize once; the three verify-stage reads hit the cache
-    verified = jaccard_verify(
-        df, cands, id_col, text_col, k=k, threshold=threshold,
-        shingles_df=shingles_df,
-    )
-    # Checkpoint the (small) verified output and release the candidate
-    # cache before returning — the prefix engine's teardown contract (r10
-    # self-review): repeated invocations must not accumulate cache entries.
-    try:
-        return verified.localCheckpoint()
-    finally:
-        cands.unpersist()
+    with held() as h:
+        cands = h.keep(near_dup_candidates(
+            df, id_col, text_col, k=k, num_hashes=num_hashes, bands=bands,
+            seed=seed, shingles_df=shingles_df,
+        ))
+        cands.count()  # the three verify-stage reads hit the cache
+        return jaccard_verify(
+            df, cands, id_col, text_col, k=k, threshold=threshold,
+            shingles_df=shingles_df,
+        ).localCheckpoint()
 
 
 def drop_near_duplicates(
@@ -639,7 +624,7 @@ def near_dup_pairs_exact(
                 ),
             )
         )
-        exploded = _widen(df).select(
+        exploded = widen_scan(df).select(
             F.col(id_col).alias("__id"),
             F.explode(with_n).alias("__e"),
         ).select("__id", F.col("__e.n").alias("__n"), F.col("__e.s").alias("__s"))
@@ -1065,41 +1050,40 @@ def near_dup_pairs_incremental(
     shuffle carries packed fixed-width band-key structs (see
     :func:`band_keys`) and doc ids, never text).
     """
-    from pyspark import StorageLevel
-
-    cands = incremental_band_candidates(
-        corpus, batch, id_col, text_col, k=k, num_hashes=num_hashes,
-        bands=bands, seed=seed, signature_strategy=signature_strategy,
-        corpus_shingles=corpus_shingles, batch_shingles=batch_shingles,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    cands.count()  # materialize: verify references it several times
-
-    # Verify via the SHARED exact-Jaccard funnel (one copy of the rounding /
-    # shingle-distinct semantics the oracles mirror): canonicalize pairs to
-    # jaccard_verify's id_a < id_b convention over the unioned frame, then
-    # map survivors back to their sides. Requires ids disjoint across the
-    # two frames (the incremental contract: corpus and batch share an id
-    # space but never an id).
-    both = batch.select(id_col, text_col).unionByName(
-        corpus.select(id_col, text_col)
-    )
-    canon = cands.select(
-        F.least("batch_id", "corpus_id").alias("id_a"),
-        F.greatest("batch_id", "corpus_id").alias("id_b"),
-        "batch_id", "corpus_id",
-    )
-    both_sh = (
-        batch_shingles.unionByName(corpus_shingles)
-        if batch_shingles is not None and corpus_shingles is not None
-        else None
-    )
-    verified = jaccard_verify(
-        both, canon.select("id_a", "id_b").distinct(), id_col, text_col,
-        k=k, threshold=threshold, shingles_df=both_sh,
-    )
-    return verified.join(canon, ["id_a", "id_b"]).select(
-        "batch_id", "corpus_id", "jaccard"
-    )
+    with held() as h:
+        cands = h.keep(incremental_band_candidates(
+            corpus, batch, id_col, text_col, k=k, num_hashes=num_hashes,
+            bands=bands, seed=seed, signature_strategy=signature_strategy,
+            corpus_shingles=corpus_shingles, batch_shingles=batch_shingles,
+        ))
+        cands.count()  # materialize: verify references it several times
+        # Verify via the SHARED exact-Jaccard funnel (one copy of the
+        # rounding / shingle-distinct semantics the oracles mirror):
+        # canonicalize pairs to jaccard_verify's id_a < id_b convention over
+        # the unioned frame, then map survivors back to their sides.
+        # Requires ids disjoint across the two frames (the incremental
+        # contract: corpus and batch share an id space but never an id).
+        # The result reads the kept candidates, so it is checkpointed.
+        both = batch.select(id_col, text_col).unionByName(
+            corpus.select(id_col, text_col)
+        )
+        canon = cands.select(
+            F.least("batch_id", "corpus_id").alias("id_a"),
+            F.greatest("batch_id", "corpus_id").alias("id_b"),
+            "batch_id", "corpus_id",
+        )
+        both_sh = (
+            batch_shingles.unionByName(corpus_shingles)
+            if batch_shingles is not None and corpus_shingles is not None
+            else None
+        )
+        verified = jaccard_verify(
+            both, canon.select("id_a", "id_b").distinct(), id_col, text_col,
+            k=k, threshold=threshold, shingles_df=both_sh,
+        )
+        return verified.join(canon, ["id_a", "id_b"]).select(
+            "batch_id", "corpus_id", "jaccard"
+        ).localCheckpoint()
 
 
 def near_dup_pairs_prefix(
@@ -1157,8 +1141,6 @@ def near_dup_pairs_prefix(
     Output: (id_a, id_b, jaccard) with J >= threshold — identical to
     :func:`near_dup_pairs_exact` at the same (k, threshold).
     """
-    from pyspark import StorageLevel
-
     sh = (
         shingles_df
         if shingles_df is not None
@@ -1174,123 +1156,115 @@ def near_dup_pairs_prefix(
     prefix_len = (
         F.col("__n") - F.floor(F.lit(threshold) * F.col("__n")) + F.lit(1)
     ).cast("int")
-    # r14-opt: (a) the per-doc rebuild (groupBy + sort_array(collect_list)
-    # + posexplode) is CPU-dense per shuffle byte, and AQE's size-based
-    # coalescing folded it to 2 tasks — pin the groupBy's partitioning
-    # with an explicit numbered repartition on the doc id (exempt from
-    # coalescing; the sd2 lesson). (b) BOTH candidate join sides read
-    # ``pref``, and the stage profile showed the whole rebuild executing
-    # TWICE (the a/b selects canonicalize differently, so no exchange
-    # reuse) — persist the prefix frame, which is the ~(1−t) RAREST
-    # fraction of shingle occurrences, i.e. strictly smaller than the
-    # shingle frame callers already persist for this pipeline; released
-    # below the moment the candidate set is materialized.
-    target = df.sparkSession.sparkContext.defaultParallelism
-    pref = (
-        ex.join(dfc, "__h")
-        .repartition(target, "__id")
-        .groupBy("__id", "__n")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col("__df"), F.col("__h")))
-            ).alias("__o")
-        )
-        .select(
-            "__id",
-            "__n",
-            # posexplode: __p is the shingle's 1-based POSITION in the
-            # doc's full global-order sorted list (the slice starts at 1,
-            # so slice index == list index) — the input to the PPJoin
-            # positional filter below.
-            F.posexplode(F.slice("__o", F.lit(1), prefix_len)).alias(
-                "__p0", "__e"
-            ),
-        )
-        .select(
-            "__id",
-            "__n",
-            (F.col("__p0") + F.lit(1)).alias("__p"),
-            F.col("__e.__h").alias("__h"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    a = pref.select(
-        F.col("__id").alias("id_a"),
-        F.col("__n").alias("__na"),
-        F.col("__p").alias("__pa"),
-        "__h",
-    )
-    b = pref.select(
-        F.col("__id").alias("id_b"),
-        F.col("__n").alias("__nb"),
-        F.col("__p").alias("__pb"),
-        "__h",
-    )
-    # POSITIONAL filter (PPJoin, Xiao et al. WWW'08 Lemma 2, bulk form):
-    # J >= t  <=>  |A∩B| >= α = t/(1+t)·(|A|+|B|). Per candidate pair let
-    # o = number of shared PREFIX shingles, (ia, jb) = positions of the
-    # order-MAXIMAL shared prefix shingle. Every shared shingle ordered
-    # below that one lies in BOTH prefixes (positions are consistent with
-    # the global order), so it is counted in o exactly; every shared
-    # shingle above it sits past position ia in A and jb in B. Hence
-    # |A∩B| <= o + min(|A|−ia, |B|−jb), and pairs whose bound misses α
-    # can never verify — dropped before the (dominant) exact-Jaccard
-    # verify join ever sees them. max(__pa)/max(__pb) both belong to that
-    # same maximal shingle, again by order-consistency of positions. The
-    # 1e-9 slack keeps float noise in t/(1+t)·(n_a+n_b) from dropping a
-    # boundary pair — a loose α only admits candidates verify will reject.
-    alpha = (
-        F.lit(threshold) / F.lit(1.0 + threshold)
-        * (F.col("__na") + F.col("__nb")) - F.lit(1e-9)
-    )
-    cand = (
-        a.join(
-            b,
-            (a["__h"] == b["__h"])
-            & (F.col("id_a") < F.col("id_b"))
-            # Length filter: J >= t implies min(|A|,|B|) >= t·max(|A|,|B|).
-            & (
-                F.least("__na", "__nb")
-                >= F.lit(threshold) * F.greatest("__na", "__nb")
-            ),
-        )
-        .groupBy("id_a", "id_b", "__na", "__nb")
-        .agg(
-            F.count(F.lit(1)).alias("__o"),
-            F.max("__pa").alias("__ia"),
-            F.max("__pb").alias("__jb"),
-        )
-        .filter(
-            F.col("__o")
-            + F.least(
-                F.col("__na") - F.col("__ia"), F.col("__nb") - F.col("__jb")
+    with held() as h:
+        # r14-opt: (a) the per-doc rebuild (groupBy + sort_array(collect_list)
+        # + posexplode) is CPU-dense per shuffle byte, and AQE's size-based
+        # coalescing folded it to 2 tasks — pin the groupBy's partitioning
+        # with an explicit numbered repartition on the doc id (exempt from
+        # coalescing; the sd2 lesson). (b) BOTH candidate join sides read
+        # ``pref``, and the stage profile showed the whole rebuild executing
+        # TWICE (the a/b selects canonicalize differently, so no exchange
+        # reuse) — persist the prefix frame, which is the ~(1−t) RAREST
+        # fraction of shingle occurrences, i.e. strictly smaller than the
+        # shingle frame callers already persist for this pipeline; released
+        # below the moment the candidate set is materialized.
+        target = df.sparkSession.sparkContext.defaultParallelism
+        pref = h.keep(
+            ex.join(dfc, "__h")
+            .repartition(target, "__id")
+            .groupBy("__id", "__n")
+            .agg(
+                F.sort_array(
+                    F.collect_list(F.struct(F.col("__df"), F.col("__h")))
+                ).alias("__o")
             )
-            >= alpha
+            .select(
+                "__id",
+                "__n",
+                # posexplode: __p is the shingle's 1-based POSITION in the
+                # doc's full global-order sorted list (the slice starts at 1,
+                # so slice index == list index) — the input to the PPJoin
+                # positional filter below.
+                F.posexplode(F.slice("__o", F.lit(1), prefix_len)).alias(
+                    "__p0", "__e"
+                ),
+            )
+            .select(
+                "__id",
+                "__n",
+                (F.col("__p0") + F.lit(1)).alias("__p"),
+                F.col("__e.__h").alias("__h"),
+            )
         )
-        .select("id_a", "id_b")
+        a = pref.select(
+            F.col("__id").alias("id_a"),
+            F.col("__n").alias("__na"),
+            F.col("__p").alias("__pa"),
+            "__h",
+        )
+        b = pref.select(
+            F.col("__id").alias("id_b"),
+            F.col("__n").alias("__nb"),
+            F.col("__p").alias("__pb"),
+            "__h",
+        )
+        # POSITIONAL filter (PPJoin, Xiao et al. WWW'08 Lemma 2, bulk form):
+        # J >= t  <=>  |A∩B| >= α = t/(1+t)·(|A|+|B|). Per candidate pair let
+        # o = number of shared PREFIX shingles, (ia, jb) = positions of the
+        # order-MAXIMAL shared prefix shingle. Every shared shingle ordered
+        # below that one lies in BOTH prefixes (positions are consistent with
+        # the global order), so it is counted in o exactly; every shared
+        # shingle above it sits past position ia in A and jb in B. Hence
+        # |A∩B| <= o + min(|A|−ia, |B|−jb), and pairs whose bound misses α
+        # can never verify — dropped before the (dominant) exact-Jaccard
+        # verify join ever sees them. max(__pa)/max(__pb) both belong to that
+        # same maximal shingle, again by order-consistency of positions. The
+        # 1e-9 slack keeps float noise in t/(1+t)·(n_a+n_b) from dropping a
+        # boundary pair — a loose α only admits candidates verify will reject.
+        alpha = (
+            F.lit(threshold) / F.lit(1.0 + threshold)
+            * (F.col("__na") + F.col("__nb")) - F.lit(1e-9)
+        )
+        cand = h.keep(
+            a.join(
+                b,
+                (a["__h"] == b["__h"])
+                & (F.col("id_a") < F.col("id_b"))
+                # Length filter: J >= t implies min(|A|,|B|) >= t·max(|A|,|B|).
+                & (
+                    F.least("__na", "__nb")
+                    >= F.lit(threshold) * F.greatest("__na", "__nb")
+                ),
+            )
+            .groupBy("id_a", "id_b", "__na", "__nb")
+            .agg(
+                F.count(F.lit(1)).alias("__o"),
+                F.max("__pa").alias("__ia"),
+                F.max("__pb").alias("__jb"),
+            )
+            .filter(
+                F.col("__o")
+                + F.least(
+                    F.col("__na") - F.col("__ia"), F.col("__nb") - F.col("__jb")
+                )
+                >= alpha
+            )
+            .select("id_a", "id_b")
+        )
         # Same stage-boundary materialization as the minhash/exact paths:
         # the verify stage reads the candidate frame three times, and
         # without it the df-count + sort + prefix self-join all re-run per
         # read (measured 3x on ss1).
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cand.count()
-    # The candidate set is materialized — the prefix frame has served both
-    # join sides and is released before the verify stage runs.
-    pref.unpersist()
-    verified = jaccard_verify(
-        df, cand, id_col, text_col, k=k, threshold=threshold, shingles_df=sh
-    )
-    # The verified pair set is the funnel's (small) OUTPUT — eagerly
-    # localCheckpoint it so the candidate cache can be RELEASED before
-    # returning (r10 self-review: every invocation leaked one cand entry
-    # across bench min-of-2 / parity sweeps). Consumers get a flat
-    # ExistingRDD scan; callers that passed a persisted ``shingles_df``
-    # can likewise unpersist it as soon as this returns.
-    try:
+        cand.count()
+        # The candidate set is materialized — the prefix frame has served
+        # both join sides and is released before the verify stage runs.
+        h.drop(pref)
+        verified = jaccard_verify(
+            df, cand, id_col, text_col, k=k, threshold=threshold, shingles_df=sh
+        )
+        # Consumers get a flat checkpointed scan, so callers that passed a
+        # kept ``shingles_df`` can release it as soon as this returns.
         return verified.localCheckpoint()
-    finally:
-        cand.unpersist()
 
 
 def repeated_ngram_spans(
@@ -1347,13 +1321,13 @@ def repeated_ngram_spans(
     # r14-opt: the positional-gram pipeline (tokenize + per-position md5) is
     # pure per-row CPU and is derived TWICE (aggregate side + probe side);
     # on a one-split local file both passes ran inside single-task scan
-    # stages (stage-profiled 2.1 s + 1.3 s). _widen floors the scan
+    # stages (stage-profiled 2.1 s + 1.3 s). widen_scan floors the scan
     # parallelism at cores — no-op at real scale — and both derivations
     # reuse the one spread exchange. All downstream aggregates are exact
     # (md5 keys, integer min/max/count), so partitioning cannot perturb
     # results.
     t = (
-        _widen(df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t")))
+        widen_scan(df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t")))
         .select("__id", tokens(F.lower(F.col("__t"))).alias("__toks"))
         .select("__id", "__toks", F.size("__toks").alias("__nt"))
         .filter(F.col("__nt") >= n)

@@ -26,8 +26,9 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+
+from agent_data_wrangler_spark.operators.held import Held, held
 
 
 def pagerank(
@@ -138,28 +139,15 @@ def pagerank(
     # No repartition HERE: the iteration-join layout decision needs |N|,
     # which is only known after the node universe is counted — see the
     # broadcast_max_nodes strategy switch in _pagerank_body.
-    # Every persisted build frame is recorded in this ledger the moment it
-    # is persisted, and the single try/finally below starts IMMEDIATELY
-    # after the first persist — so every exit path (the empty-graph raise,
-    # the source_nodes validation raises, a step() job failing mid-loop,
-    # non-convergence) unpersists exactly what was persisted. A ledger
-    # rather than a fixed trio because the early raises fire before the
-    # later frames exist.
-    persisted: list[DataFrame] = []
-
-    def _unpersist_build_frames() -> None:
-        for frame in persisted:
-            frame.unpersist()
-
-    edges_deg = e.join(deg, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    persisted.append(edges_deg)
-    try:
+    # Every exit path (the empty-graph raise, the source_nodes validation
+    # raises, a step() job failing mid-loop, non-convergence) releases
+    # exactly the build frames kept so far.
+    with held() as h:
+        edges_deg = h.keep(e.join(deg, "src"))
         return _pagerank_body(
-            edges_deg, persisted, tp=tp, damping=damping,
+            h, edges_deg, tp=tp, damping=damping,
             source_nodes=source_nodes, num_iters=num_iters, tol=tol,
             max_iter=max_iter, broadcast_max_nodes=broadcast_max_nodes)
-    finally:
-        _unpersist_build_frames()
 
 
 def _size_conf_bytes(value: str) -> int:
@@ -198,8 +186,8 @@ def _derived_broadcast_guard(spark: SparkSession) -> int:
 
 
 def _pagerank_body(
+    h: Held,
     edges_deg: DataFrame,
-    persisted: list[DataFrame],
     *,
     tp: float,
     damping: float,
@@ -209,20 +197,18 @@ def _pagerank_body(
     max_iter: int,
     broadcast_max_nodes: int | None,
 ) -> DataFrame:
-    """Everything after the first persist — runs inside pagerank's
-    try/finally so every raise or return unpersists the ledger."""
+    """Everything after the first persist — runs inside pagerank's held
+    scope, so every raise or return releases the frames kept in ``h``."""
     if broadcast_max_nodes is None:
         broadcast_max_nodes = _derived_broadcast_guard(
             edges_deg.sparkSession)
     # Node universe = src ∪ dst (a dst-only node is a dangling node: it
     # holds rank and must receive the base + dangling terms each round).
-    nodes = (
+    nodes = h.keep(
         edges_deg.select(F.col("src").alias("node"))
         .unionByName(edges_deg.select(F.col("dst").alias("node")))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    persisted.append(nodes)
     n_nodes = float(nodes.count())
     if n_nodes == 0:
         raise ValueError(
@@ -256,16 +242,13 @@ def _pagerank_body(
     # subtree in fused (un-checkpointed) step chains, which is quadratic in
     # fused-iteration count — measurable 3x on gr1 — for a value that is
     # identically zero.
-    dangling = (
+    dangling = h.keep(
         nodes.join(edges_deg, nodes["node"] == edges_deg["src"], "left_anti")
         .select("node")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    persisted.append(dangling)
     has_dangling = not dangling.isEmpty()
     if not has_dangling:
-        dangling.unpersist()
-        persisted.remove(dangling)
+        h.drop(dangling)
 
     # Iteration-join strategy (see pagerank docstring). Spark's own
     # autoBroadcast threshold (10 MB default) is far below any real rank
@@ -276,20 +259,16 @@ def _pagerank_body(
     # shuffles.
     broadcast_ranks = n_nodes <= broadcast_max_nodes
     if not broadcast_ranks:
-        iter_edges = (
-            edges_deg.repartition("src")
-            .sortWithinPartitions("src")
-            .persist(StorageLevel.MEMORY_AND_DISK)
+        iter_edges = h.keep(
+            edges_deg.repartition("src").sortWithinPartitions("src")
         )
-        persisted.append(iter_edges)
         iter_edges.count()  # materialize, then drop the unsorted copy
         if has_dangling:
             # isEmpty above only touched the first partitions; fill the
             # dangling cache fully while its edges_deg lineage is still
             # cached, or the per-iteration semi-join would re-derive it.
             dangling.count()
-        edges_deg.unpersist()
-        persisted.remove(edges_deg)
+        h.drop(edges_deg)
     else:
         iter_edges = edges_deg
 
@@ -334,10 +313,8 @@ def _pagerank_body(
     # so consumers get a flat ExistingRDD scan instead of re-running the
     # whole loop per action.
     # The returned frame is an eagerly-materialized localCheckpoint (an
-    # ExistingRDD scan) that no longer depends on the persisted build
-    # frames, so pagerank's finally unpersists them before returning —
-    # repeated invocations (bench min-of-2 passes, full-registry parity
-    # sweeps) would otherwise accumulate leaked cache entries per call.
+    # ExistingRDD scan) that no longer depends on the kept build frames,
+    # so pagerank's scope releases them before returning.
     # The operator already paid the nodes.count() job, so the result frame
     # carries it as a plain Python attribute (``pagerank_n_nodes``) —
     # callers that need N for scaling (gr1's rank*N display) reuse it
@@ -369,7 +346,7 @@ def _pagerank_body(
         if delta is not None and delta < tol:
             # The delta aggregate above already materialized this step's
             # lazy checkpoint, so the returned frame is lineage-free and
-            # survives the caller's finally-block unpersist.
+            # survives the scope's release.
             ranks.pagerank_n_nodes = n_nodes
             return ranks
     raise RuntimeError(

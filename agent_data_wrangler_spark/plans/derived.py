@@ -59,6 +59,7 @@ except ImportError:  # non-POSIX — fall back to best-effort publish
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from agent_data_wrangler_spark.operators.held import held
 from agent_data_wrangler_spark.sources.readers import (
     _path_identity,
     read_table,
@@ -143,14 +144,13 @@ def _build_trade_graph(
     # groupBy(collect_set) — the old .distinct() + self-join-on-orderkey
     # shuffled the deduped frame three times; the sorted-array combos
     # generate each s1<s2 pair once, bounded by C(basket, 2).
-    sets = (
-        read_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_suppkey")
-        .groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_suppkey")).alias("ss"))
-        .persist()
-    )
-    try:
+    with held() as h:
+        sets = h.keep(
+            read_table(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_suppkey")
+            .groupBy("l_orderkey")
+            .agg(F.array_sort(F.collect_set("l_suppkey")).alias("ss"))
+        )
         o = read_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey")
         (
@@ -179,8 +179,6 @@ def _build_trade_graph(
             .agg(F.count(F.lit(1)).alias("w"))
             .write.parquet(os.path.join(stage, "cosupply_pairs"))
         )
-    finally:
-        sets.unpersist()
     try:
         os.rename(stage, base)
     except OSError:
@@ -216,10 +214,9 @@ def trade_graph_tables(
     session memo is keyed by that same identity, so later calls AND later
     sessions reuse a completed build, while a regenerated source — even
     into the same directory mid-session — triggers a rebuild, never a
-    stale read). Later calls are a parquet footer read. The build persists
-    the shared distinct (orderkey, suppkey) frame so lineitem is scanned
-    once for both outputs, and unpersists it before returning
-    (exception-safe — the graph operators' ledger contract).
+    stale read). Later calls are a parquet footer read. The build keeps
+    the shared per-order supplier-set frame cached so lineitem is scanned
+    once for both outputs, and releases it on every exit path.
     """
     base = _cache_dir(sf_dir)
     edges_path = os.path.join(base, "trade_edges")

@@ -84,7 +84,9 @@ class Stage:
     ``cache=True`` persists the stage output (§4 memoization): use it when a
     downstream fit-then-transform pair would otherwise recompute the full
     lineage per fitted statistic (the round-1 t5 lesson: each redundant pass
-    is a full-table read at 100 TB).
+    is a full-table read at 100 TB). It is the one cache outside
+    ``operators/held.py``: the cached frame outlives ``apply`` and the
+    pipeline's caller owns its release, so no ``held`` block can scope it.
     """
 
     name: str

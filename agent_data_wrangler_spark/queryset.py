@@ -35,6 +35,7 @@ from agent_data_wrangler_spark.operators import (
     transform,
     windows,
 )
+from agent_data_wrangler_spark.operators.held import Held, checkpointed
 from agent_data_wrangler_spark.plans.derived import staged
 from agent_data_wrangler_spark.sources.readers import read_table
 
@@ -1361,28 +1362,15 @@ _P5A_COLS = ["l_quantity", "l_extendedprice", "l_discount"]
     ORDER BY col_name
     """,
 )
-def p5a_describe_approx_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res, approx = _p5a_frames(spark, sf_dir)
-    # px1 teardown pattern: materialize the 3-row result eagerly so the
-    # persisted describe frame can be released before returning.
-    try:
-        return res.localCheckpoint()
-    finally:
-        approx.unpersist()
-
-
-def _p5a_frames(spark: SparkSession, sf_dir: str):
-    """p5a's UN-checkpointed result plus the persisted describe frame —
-    split out so tests/test_plan_shapes.py can pin the WORKING plan."""
-    from pyspark import StorageLevel
-
+@checkpointed
+def p5a_describe_approx_lineitem(
+    h: Held, spark: SparkSession, sf_dir: str
+) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    # Persisted: the 3-row describe frame feeds TWO consumers (the sketch
-    # pivot below and the final join) — unpersisted, Catalyst replans the
+    # Kept: the 3-row describe frame feeds TWO consumers (the sketch
+    # pivot below and the final join) — uncached, Catalyst replans the
     # full sketch scan into each (the tw1 lesson).
-    approx = profile.describe_numeric(li, _P5A_COLS, approx=True).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    approx = h.keep(profile.describe_numeric(li, _P5A_COLS, approx=True))
     # Exact rank envelope by COUNTING, not by exact percentile (r12): the
     # previous form inverted ranks with one exact-percentile aggregate,
     # which buffers every column value per partition — the very OOM shape
@@ -1438,7 +1426,7 @@ def _p5a_frames(spark: SparkSession, sf_dir: str):
         )
     )
     joined = approx.join(F.broadcast(env_long), "column")
-    res = joined.select(
+    return joined.select(
         F.col("column").alias("col_name"),
         F.col("count").cast("bigint").alias("n"),
         F.round("mean", 4).alias("mean"),
@@ -1447,7 +1435,6 @@ def _p5a_frames(spark: SparkSession, sf_dir: str):
         F.col("max").cast("double").alias("max_v"),
         "p25_in_env", "p50_in_env", "p75_in_env",
     ).orderBy("col_name")
-    return res, approx
 
 
 # ---------------------------------------------------------------------------
@@ -3981,20 +3968,21 @@ def sub6_top_revenue_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
           > 3 * (SELECT sum(part_i) FROM per_part)
     """,
 )
-def sub7_key_part_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
+@checkpointed
+def sub7_key_part_revenue_share(
+    h: Held, spark: SparkSession, sf_dir: str
+) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
     # per_part feeds TWO consumers (the 1-row total and the filter);
-    # unpersisted, Catalyst evaluates the subtree twice — two full
-    # lineitem scans + two aggregates (the kl1/tf1 multi-reference trap).
-    # Persist AND materialize; the frame is |parts| rows.
-    per_part = li.groupBy("l_partkey").agg(
+    # uncached, Catalyst evaluates the subtree twice — two full lineitem
+    # scans + two aggregates (the kl1/tf1 multi-reference trap). The frame
+    # is |parts| rows.
+    per_part = h.keep(li.groupBy("l_partkey").agg(
         F.sum(
             F.round(F.col("l_extendedprice") * 100).cast("bigint")
             * F.round((1 - F.col("l_discount")) * 100).cast("bigint")
         ).alias("part_i")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     per_part.count()
     total = per_part.agg(
         F.sum(F.col("part_i").cast("decimal(38,0)")).alias("__total_i"),
@@ -4171,16 +4159,15 @@ def ew1_ewma_user_level_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY target_day
     """,
 )
-def wa1_weekly_active_users_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
+@checkpointed
+def wa1_weekly_active_users_events(
+    h: Held, spark: SparkSession, sf_dir: str
+) -> DataFrame:
     e = read_table(spark, sf_dir, "events")
     # The deduped frame feeds TWO consumers (the max-day scalar and the
-    # contribution explode); unpersisted, each re-scans events and re-runs
+    # contribution explode); uncached, each re-scans events and re-runs
     # the dedup shuffle (the kl1/sub7 multi-reference trap).
-    ud = e.select(
-        "user_id", F.to_date("ts").alias("d")
-    ).distinct().persist(StorageLevel.MEMORY_AND_DISK)
+    ud = h.keep(e.select("user_id", F.to_date("ts").alias("d")).distinct())
     ud.count()
     maxd = ud.agg(F.max("d").alias("__maxd"))
     contrib = ud.select(
@@ -4317,21 +4304,20 @@ def cq1_csv_quarantine_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c
     """,
 )
-def ks1_ks_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+@checkpointed
+def ks1_ks_drift_events(h: Held, spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "events").filter(
         F.col("value").isNotNull()
         & F.col("event_type").isin("click", "purchase")
     )
-    from pyspark import StorageLevel
-
     # The per-value count frame feeds BOTH the prefix-sum chain and the
-    # totals aggregate; unpersisted, each branch re-scans events and
+    # totals aggregate; uncached, each branch re-scans events and
     # re-aggregates (the kl1/sub7 multi-reference trap). |distinct values|
     # rows — orders of magnitude below the event count.
-    s = e.groupBy("value").agg(
+    s = h.keep(e.groupBy("value").agg(
         F.count(F.when(F.col("event_type") == "click", 1)).alias("c1"),
         F.count(F.when(F.col("event_type") == "purchase", 1)).alias("c2"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     s.count()
     cum = windows.distributed_prefix_sums(
         s,
@@ -5299,7 +5285,8 @@ def fi1_frequent_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tri
     """,
 )
-def tr1_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
+@checkpointed
+def tr1_triangle_count(h: Held, spark: SparkSession, sf_dir: str) -> DataFrame:
     from agent_data_wrangler_spark.plans.derived import trade_graph_tables
 
     # The (s1, s2, w) co-supply pair weights come from the MATERIALIZED
@@ -5309,11 +5296,10 @@ def tr1_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # across repeated invocations; tr1 starts at the thresholding step.
     _, pairs = trade_graph_tables(spark, sf_dir)
     tot = pairs.agg(F.expr("percentile(w, 0.9)").alias("q"))
-    edges = (
+    edges = h.keep(
         pairs.crossJoin(F.broadcast(tot))
         .filter(F.col("w") >= F.col("q"))
         .select("s1", "s2")
-        .persist()
     )
     # Orient by (degree, id): each edge points from its lower (deg, id)
     # endpoint, bounding the 2-path join's per-vertex fanout by the max
@@ -5330,10 +5316,10 @@ def tr1_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     lower_first = (F.col("deg1") < F.col("deg2")) | (
         (F.col("deg1") == F.col("deg2")) & (F.col("s1") < F.col("s2"))
     )
-    oriented = ranked.select(
+    oriented = h.keep(ranked.select(
         F.when(lower_first, F.col("s1")).otherwise(F.col("s2")).alias("src"),
         F.when(lower_first, F.col("s2")).otherwise(F.col("s1")).alias("dst"),
-    ).persist()
+    ))
     p1 = oriented.select(F.col("src").alias("a"), F.col("dst").alias("b"))
     p2 = oriented.select(F.col("src").alias("b"), F.col("dst").alias("c"))
     two_paths = p1.join(p2, "b")

@@ -38,6 +38,7 @@ from agent_data_wrangler_spark.functions.text import (
     tokens,
 )
 from agent_data_wrangler_spark.operators import dedup, similarity
+from agent_data_wrangler_spark.operators.held import Held, checkpointed, held
 from agent_data_wrangler_spark.plans.derived import _scratch_dir, staged
 from agent_data_wrangler_spark.sources.readers import read_table
 
@@ -342,19 +343,16 @@ def n4_jaccard_pairs_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ex
     """,
 )
-def n5_minhash_neardup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
+@checkpointed
+def n5_minhash_neardup_documents(
+    h: Held, spark: SparkSession, sf_dir: str
+) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
     # Shared shingle stage (r05 verdict item 4): the minhash leg and the
     # exact-oracle leg each used to re-derive shingles from raw text — two
-    # full tokenize+k-gram scans. Compute once, persist, feed both. Eager
-    # count: the first downstream action (ex.count) references sh on BOTH
-    # self-join branches, and a lazy persist referenced several times inside
-    # one action recomputes the pipeline first (the n12 rule).
-    sh = dedup.shingle_frame(d, "doc_id", "text", k=3).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    # full tokenize+k-gram scans. Compute once, keep, feed both; the first
+    # downstream action (ex.count) reads sh on BOTH self-join branches.
+    sh = h.keep(dedup.shingle_frame(d, "doc_id", "text", k=3))
     sh.count()
     # Shared verify leg (r13 verdict item 1, guide §2.4/§5): the exact pair
     # frame IS the verify table for the minhash candidates. jaccard_verify
@@ -366,17 +364,17 @@ def n5_minhash_neardup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The minhash leg therefore drops its whole per-pair verify subtree
     # (touched-doc semi-join + two pair joins + per-pair array_intersect)
     # and the exact leg — already a declared output (n_pairs_exact) — is
-    # computed once and persisted for all consumers.
+    # computed once and kept for all consumers.
     # (test_minhash_verify_equals_exact_semijoin pins the equivalence.)
-    ex = dedup.near_dup_pairs_exact(
+    ex = h.keep(dedup.near_dup_pairs_exact(
         d, "doc_id", "text", k=3, threshold=0.7, shingles_df=sh
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     ex.count()
-    mh = dedup.near_dup_candidates(
+    mh = h.keep(dedup.near_dup_candidates(
         d, "doc_id", "text", k=3, num_hashes=64, bands=16, shingles_df=sh
     ).join(
         ex.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     mh.count()
     extra = mh.select("id_a", "id_b").join(
         ex.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti"
@@ -385,7 +383,7 @@ def n5_minhash_neardup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     extra_stats = extra.agg(F.count(F.lit(1)).alias("__extra"))
     ex_stats = ex.agg(F.count(F.lit(1)).alias("n_pairs_exact"))
     docs = d.agg(F.count(F.lit(1)).alias("n_docs"))
-    out = (
+    return (
         docs.crossJoin(ex_stats).crossJoin(mh_stats).crossJoin(extra_stats).select(
             "n_docs",
             "n_pairs_exact",
@@ -396,16 +394,6 @@ def n5_minhash_neardup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("recall_ok"),
         )
     )
-    # 1-row verdict: eagerly checkpoint it and release all three build
-    # caches (shingles + both pair frames) before returning — zero cache
-    # entries leaked per invocation (r10 self-review; the tw1/pagerank
-    # teardown contract applied to the heaviest dedup query).
-    try:
-        return out.localCheckpoint()
-    finally:
-        sh.unpersist()
-        mh.unpersist()
-        ex.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -655,21 +643,17 @@ _ANN_VERDICT_ORACLE = f"""
 """
 
 
-def _ann_verdict(e: DataFrame, ann: DataFrame) -> DataFrame:
+def _ann_verdict(h: Held, e: DataFrame, ann: DataFrame) -> DataFrame:
     """Shared verdict shape for the approximate top-k queries (n7/n9):
     exact top-1 value columns + recall@k / result-size verdict booleans.
 
     ``exact`` and ``ann`` are <= k-row frames referenced twice each (overlap
-    join + count). Persist AND materialize (count) before the multi-reference
-    plan: lazy persists referenced several times inside one action recompute
-    the pipeline before the cache exists."""
-    from pyspark import StorageLevel
-
-    ann = ann.persist(StorageLevel.MEMORY_AND_DISK)
+    join + count), so both are kept in ``h`` and materialized."""
+    ann = h.keep(ann)
     ann.count()
-    exact = similarity.topk_cosine(
+    exact = h.keep(similarity.topk_cosine(
         e, "embedding", QUERY_VEC, k=10, payload_cols=["vec_id"]
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     exact.count()
     top1 = similarity.topk_cosine(e, "embedding", QUERY_VEC, k=1, payload_cols=["vec_id"]).select(
         F.col("vec_id").cast("bigint").alias("exact_top1_vec_id"),
@@ -696,12 +680,13 @@ def _ann_verdict(e: DataFrame, ann: DataFrame) -> DataFrame:
 
 
 @query("n7_lsh_topk_embeddings", oracle=_ANN_VERDICT_ORACLE)
-def n7_lsh_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+@checkpointed
+def n7_lsh_topk_embeddings(h: Held, spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     ann = similarity.topk_cosine_lsh(
         e, "embedding", QUERY_VEC, k=10, payload_cols=["vec_id"]
     )
-    return _ann_verdict(e, ann)
+    return _ann_verdict(h, e, ann)
 
 
 # ---------------------------------------------------------------------------
@@ -746,11 +731,11 @@ _N8_OFFSET = 1_000_000
     FROM ex
     """,
 )
-def n8_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+@checkpointed
+def n8_embedding_neardup_pairs(
+    h: Held, spark: SparkSession, sf_dir: str
+) -> DataFrame:
     from agent_data_wrangler_spark.functions.vectors import cosine_similarity
-
-    from pyspark import StorageLevel
-
     from agent_data_wrangler_spark.sources.readers import widen_scan
 
     e = read_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -771,13 +756,11 @@ def n8_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     num_planes = similarity.derive_lsh_params(
         n_base + min(n_base, _N8_PLANT))[0]
     # The LSH self-join output is referenced twice (planted count + subset
-    # check) and is tiny by construction; persist + materialize caps it at
-    # one run (a lazy persist would recompute under the multi-reference
-    # final action).
-    pairs = similarity.similarity_join_lsh(
+    # check) and is tiny by construction; keeping it caps it at one run.
+    pairs = h.keep(similarity.similarity_join_lsh(
         aug, aug, "embedding", threshold=0.95, id_col="vec_id",
         num_planes=num_planes,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     pairs.count()
     # Bounded exact leg: all pairs within the 50-row planted subset. The
     # non-equi join compiles to BroadcastNestedLoopJoin over a constant-size
@@ -785,12 +768,12 @@ def n8_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     small = base.unionByName(planted)
     a = small.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"))
     b = small.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"))
-    exact_pairs = (
+    exact_pairs = h.keep(
         a.join(b, F.col("id_a") < F.col("id_b"))
         .withColumn("cs", F.round(cosine_similarity(F.col("__va"), F.col("__vb")), 6))
         .filter(F.col("cs") >= 0.95)
         .select("id_a", "id_b")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    )
     exact_pairs.count()
     ids_small = small.select("vec_id")
     lsh_sub = (
@@ -826,12 +809,13 @@ def n8_embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ~31.6k lists / ~90 probes (~0.3% probed). recall_ok gates at 0.7.
 # ---------------------------------------------------------------------------
 @query("n9_ivf_topk_embeddings", oracle=_ANN_VERDICT_ORACLE)
-def n9_ivf_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+@checkpointed
+def n9_ivf_topk_embeddings(h: Held, spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     ann = similarity.topk_cosine_ivf(
         e, "embedding", QUERY_VEC, k=10, payload_cols=["vec_id"]
     )
-    return _ann_verdict(e, ann)
+    return _ann_verdict(h, e, ann)
 
 
 def _staged_lsh(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
@@ -860,14 +844,17 @@ def _staged_lsh(spark: SparkSession, sf_dir: str) -> tuple[str, int, int]:
 # additionally pinned by a PartitionFilters plan test.
 # ---------------------------------------------------------------------------
 @query("n10_lsh_pruned_topk_embeddings", oracle=_ANN_VERDICT_ORACLE)
-def n10_lsh_pruned_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+@checkpointed
+def n10_lsh_pruned_topk_embeddings(
+    h: Held, spark: SparkSession, sf_dir: str
+) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     path, num_planes, shift = _staged_lsh(spark, sf_dir)
     ann = similarity.topk_cosine_lsh_pruned(
         spark, path, "embedding", QUERY_VEC, k=10,
         num_planes=num_planes, shift=shift, payload_cols=["vec_id"],
     )
-    return _ann_verdict(e, ann)
+    return _ann_verdict(h, e, ann)
 
 
 def _staged_ivf(spark: SparkSession, sf_dir: str) -> str:
@@ -915,13 +902,16 @@ def _staged_ivf_dedup(spark: SparkSession, sf_dir: str) -> str:
 # physics, not the recall contract — plus a PartitionFilters plan test.
 # ---------------------------------------------------------------------------
 @query("n11_ivf_pruned_topk_embeddings", oracle=_ANN_VERDICT_ORACLE)
-def n11_ivf_pruned_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+@checkpointed
+def n11_ivf_pruned_topk_embeddings(
+    h: Held, spark: SparkSession, sf_dir: str
+) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     path = _staged_ivf(spark, sf_dir)
     ann = similarity.topk_cosine_ivf_pruned(
         spark, path, "embedding", QUERY_VEC, k=10, payload_cols=["vec_id"]
     )
-    return _ann_verdict(e, ann)
+    return _ann_verdict(h, e, ann)
 
 
 # ---------------------------------------------------------------------------
@@ -2346,29 +2336,27 @@ def qs1_source_quota_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ex
     """,
 )
-def n12_incremental_neardup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
+@checkpointed
+def n12_incremental_neardup_documents(
+    h: Held, spark: SparkSession, sf_dir: str
+) -> DataFrame:
     d = read_table(spark, sf_dir, "documents")
     batch = d.filter(F.col("doc_id") % 5 == 0)
     corpus = d.filter(F.col("doc_id") % 5 != 0)
     # Shared shingle stage (r05 verdict item 4): one tokenize+k-gram pass
     # feeds the incremental leg's two signature sides, the verify stage, and
     # the exact-oracle leg — previously each re-scanned raw text.
-    sh = dedup.shingle_frame(d, "doc_id", "text", k=3).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    sh = h.keep(dedup.shingle_frame(d, "doc_id", "text", k=3))
     sh.count()
     sh_b = sh.filter(F.col("__id") % 5 == 0)
     sh_c = sh.filter(F.col("__id") % 5 != 0)
     # Exact cross-pair leg FIRST: the full exact pair set filtered to one-
     # side-in-batch pairs (near_dup_pairs_exact emits id_a < id_b, so a
     # cross pair may carry the batch doc on either side).
-    ex = (
+    ex = h.keep(
         dedup.near_dup_pairs_exact(d, "doc_id", "text", k=3, threshold=0.7,
                                    shingles_df=sh)
         .filter((F.col("id_a") % 5 == 0) != (F.col("id_b") % 5 == 0))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     ex.count()
     # Shared verify leg (r13 verdict item 1, the n5 argument): a batch x
@@ -2378,7 +2366,7 @@ def n12_incremental_neardup_documents(spark: SparkSession, sf_dir: str) -> DataF
     # loses none of them. Canonicalize candidates to the exact leg's
     # id_a < id_b convention and semi-join; the incremental engine's
     # per-pair verify subtree (union frame + jaccard_verify) drops out.
-    canon = dedup.incremental_band_candidates(
+    canon = h.keep(dedup.incremental_band_candidates(
         corpus, batch, "doc_id", "text", k=3, num_hashes=64, bands=16,
         corpus_shingles=sh_c, batch_shingles=sh_b,
     ).select(
@@ -2386,7 +2374,7 @@ def n12_incremental_neardup_documents(spark: SparkSession, sf_dir: str) -> DataF
         F.greatest("batch_id", "corpus_id").alias("id_b"),
     ).join(
         ex.select("id_a", "id_b"), ["id_a", "id_b"], "left_semi"
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     canon.count()
     extra = canon.join(ex.select("id_a", "id_b"), ["id_a", "id_b"], "left_anti")
     return (
@@ -2895,24 +2883,19 @@ def ws1_weighted_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     FROM m GROUP BY source
     """,
 )
-def kl1_source_drift_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
+@checkpointed
+def kl1_source_drift_documents(
+    h: Held, spark: SparkSession, sf_dir: str
+) -> DataFrame:
     from pyspark.sql import Window
-
-    from pyspark import StorageLevel
 
     d = read_table(spark, sf_dir, "documents")
     # The (source, lang) intermediate feeds THREE consumers (marginals +
-    # the KL terms); unpersisted, each re-derives it from a fresh corpus
+    # the KL terms); uncached, each re-derives it from a fresh corpus
     # scan (verified: 3 parquet scans, zero ReusedExchange — Catalyst
-    # prunes the branches differently, same trap as tf1). Persist AND
-    # materialize (a lazy persist referenced several times inside one
-    # action recomputes before the cache exists); the frame is
+    # prunes the branches differently, same trap as tf1). The frame is
     # |sources|x|langs| rows — cache-sized at any corpus scale.
-    c = (
-        d.groupBy("source", "lang")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    c = h.keep(d.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("n")))
     c.count()
     lang_totals = c.groupBy("lang").agg(F.sum("n").alias("lang_total"))
     corpus_total = c.agg(F.sum("n").alias("corpus_total"))
@@ -3170,16 +3153,13 @@ def dg2_trade_edges_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN norms nb ON nb.label = label_b
     """,
 )
-def cl1_label_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
+@checkpointed
+def cl1_label_centroid_confusion(
+    h: Held, spark: SparkSession, sf_dir: str
+) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     ex = e.select("label", F.posexplode("embedding").alias("pos", "v"))
-    cent = (
-        ex.groupBy("label", "pos")
-        .agg(F.avg("v").alias("c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    cent = h.keep(ex.groupBy("label", "pos").agg(F.avg("v").alias("c")))
     cent.count()
     norms = cent.groupBy("label").agg(F.sum(F.col("c") * F.col("c")).alias("n2"))
     a, b = cent.alias("a"), cent.alias("b")
@@ -3582,18 +3562,10 @@ def aq1_adaptive_quality_filter_documents(
     FROM merged
     """,
 )
-def bp2_bpe_merge_apply_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res, tokd = _bp2_frames(spark, sf_dir)
-    try:
-        return res.localCheckpoint()
-    finally:
-        tokd.unpersist()
-
-
-def _bp2_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
-    """bp2's UN-checkpointed result plus the persisted dictionary — split
-    out (the li1 pattern) so plan tools can pin the WORKING plan; the
-    registry wrapper localCheckpoints, so PLANS.md shows a flat scan."""
+@checkpointed
+def bp2_bpe_merge_apply_documents(
+    h: Held, spark: SparkSession, sf_dir: str
+) -> DataFrame:
     from agent_data_wrangler_spark.functions.text import tokens as _tokens
 
     d = read_table(spark, sf_dir, "documents")
@@ -3601,15 +3573,13 @@ def _bp2_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     # map-side-combined groupBy feeds BOTH the pair fit and the merge
     # apply (previously each re-derived the corpus token explode); all
     # downstream counts are occurrence-weighted, so results are
-    # bit-identical. The dict is vocab-bounded — persist is cache-sized
-    # at any corpus scale; released after the localCheckpoint
-    # materializes the 1-row result.
-    tokd = (
+    # bit-identical. The dict is vocab-bounded — cache-sized at any
+    # corpus scale.
+    tokd = h.keep(
         d.select(F.explode(_tokens(F.lower(F.col("text")))).alias("tok"))
         .filter(F.length("tok") > 0)
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
     )
 
     pairs_per_tok = F.when(
@@ -3650,7 +3620,7 @@ def _bp2_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
     def n_syms(c):
         return F.length(c) - F.length(F.replace(c, F.lit(us), F.lit(""))) + 1
 
-    res = merged.groupBy("pair").agg(
+    return merged.groupBy("pair").agg(
         F.sum(F.col("cnt") * n_syms(F.col("j"))).alias("n_symbols_before"),
         F.sum(F.col("cnt") * n_syms(F.col("m"))).alias("n_symbols_after"),
     ).select(
@@ -3658,7 +3628,6 @@ def _bp2_frames(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]
         "n_symbols_before",
         "n_symbols_after",
     )
-    return res, tokd
 
 
 # ---------------------------------------------------------------------------
@@ -3856,38 +3825,35 @@ def _bp3_train(
     # with a distributed fallback), and the design every production BPE
     # trainer uses (distributed count, in-memory merges). The distributed
     # loop below remains the >limit path and is pinned equal by unit test.
-    j = _bp3_dict(spark, sf_dir).persist()
-    # r14 (ADVICE): the driver-fit gate is row-count AND byte-aware — a
-    # corpus of very long word types could collect hundreds of MB under a
-    # row-only limit. The char total rides the same aggregate for free;
-    # over budget lands on the distributed path, which the unit test pins
-    # equal.
-    n_words, vocab, dict_chars = (
-        j.agg(
-            F.coalesce(F.sum("cnt"), F.lit(0)).alias("n"),
-            F.count(F.lit(1)).alias("v"),
-            F.coalesce(F.sum(F.length("j")), F.lit(0)).alias("c"),
-        ).collect()[0]
-    )
-    if vocab <= driver_fit_limit and dict_chars <= driver_fit_byte_budget:
-        try:
-            words = [(r["j"], r["cnt"]) for r in j.collect()]
-        finally:
-            j.unpersist()
-        return spark.createDataFrame(
-            _bp3_driver_fit(words, _BP3_MERGES),
-            "step int, sym_a string, sym_b string, n_symbols_after bigint",
+    with held() as h:
+        j = h.keep(_bp3_dict(spark, sf_dir))
+        # r14 (ADVICE): the driver-fit gate is row-count AND byte-aware — a
+        # corpus of very long word types could collect hundreds of MB under
+        # a row-only limit. The char total rides the same aggregate for
+        # free; over budget lands on the distributed path, which the unit
+        # test pins equal.
+        n_words, vocab, dict_chars = (
+            j.agg(
+                F.coalesce(F.sum("cnt"), F.lit(0)).alias("n"),
+                F.count(F.lit(1)).alias("v"),
+                F.coalesce(F.sum(F.length("j")), F.lit(0)).alias("c"),
+            ).collect()[0]
         )
-    out_rows: list[tuple[int, str, str, int]] = []
-    pending: tuple[int, str, str] | None = None
-    released = None
-    try:
+        if vocab <= driver_fit_limit and dict_chars <= driver_fit_byte_budget:
+            words = [(r["j"], r["cnt"]) for r in j.collect()]
+            return spark.createDataFrame(
+                _bp3_driver_fit(words, _BP3_MERGES),
+                "step int, sym_a string, sym_b string, n_symbols_after bigint",
+            )
+        out_rows: list[tuple[int, str, str, int]] = []
+        pending: tuple[int, str, str] | None = None
+        released = None
         for step in range(1, _BP3_MERGES + 1):
             # ONE driver action per step: the pair total and the top pair
             # ride one 1-row crossJoin (r13-opt — halves the per-step job
             # count; pc is derived twice inside the action, but both
-            # derivations explode the CACHED vocab-sized dictionary, so a
-            # pc persist would cost more than it saves).
+            # derivations explode the CACHED vocab-sized dictionary, so
+            # keeping pc would cost more than it saves).
             pc = _bp3_pair_counts(j)
             top1 = pc.orderBy(F.col("cnt").desc(), F.col("pair").asc()).limit(1)
             row = (
@@ -3898,7 +3864,7 @@ def _bp3_train(
             # that action materialized j (on its first read) — the previous
             # iteration's frame is now releasable
             if released is not None:
-                released.unpersist()
+                h.drop(released)
             if not row:
                 raise ValueError("bp3: no adjacent symbol pairs to merge")
             if pending is not None:
@@ -3906,12 +3872,12 @@ def _bp3_train(
             pair = row[0]["pair"]
             a, b = pair.split(us)
             pending = (step, a, b)
-            nxt = j.select(
+            nxt = h.keep(j.select(
                 F.replace(
                     F.col("j"), F.lit(us + pair), F.lit(us + pair.replace(us, ""))
                 ).alias("j"),
                 "cnt",
-            ).persist()
+            ))
             released, j = j, nxt
         n_final = j.agg(
             F.sum(
@@ -3922,12 +3888,8 @@ def _bp3_train(
                 )
             ).cast("bigint").alias("n")
         ).collect()[0]["n"]
-        if released is not None:
-            released.unpersist()
-        assert pending is not None
-        out_rows.append((*pending, int(n_final)))
-    finally:
-        j.unpersist()
+    assert pending is not None
+    out_rows.append((*pending, int(n_final)))
     return spark.createDataFrame(
         out_rows, "step int, sym_a string, sym_b string, n_symbols_after bigint"
     )
@@ -4467,24 +4429,17 @@ def iv1_inverted_search_documents(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def ss1_prefix_jaccard_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
     d = read_table(spark, sf_dir, "documents")
     # The shingle frame feeds both candidate generation and the verify
-    # stage; persist + materialize so the CPU-heavy shingling runs once.
-    sh = dedup.shingle_frame(d, "doc_id", "text", k=3).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sh.count()
-    # The prefix engine returns an eagerly-checkpointed pair set, so the
-    # shingle cache can be released immediately — zero entries leaked per
-    # invocation (r10 self-review).
-    try:
+    # stage; keep + materialize so the CPU-heavy shingling runs once. The
+    # prefix engine returns a checkpointed pair set, so the shingle cache
+    # goes as soon as it returns.
+    with held() as h:
+        sh = h.keep(dedup.shingle_frame(d, "doc_id", "text", k=3))
+        sh.count()
         return dedup.near_dup_pairs_prefix(
             d, "doc_id", "text", k=3, threshold=0.6, shingles_df=sh
         )
-    finally:
-        sh.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -4499,12 +4454,13 @@ def ss1_prefix_jaccard_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 # DuckDB recomputes from scratch.
 # ---------------------------------------------------------------------------
 @query("pq1_pq_topk_embeddings", oracle=_ANN_VERDICT_ORACLE)
-def pq1_pq_topk_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+@checkpointed
+def pq1_pq_topk_embeddings(h: Held, spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     ann = similarity.topk_cosine_pq(
         e, "embedding", QUERY_VEC, k=10, payload_cols=["vec_id"]
     )
-    return _ann_verdict(e, ann)
+    return _ann_verdict(h, e, ann)
 
 
 # ---------------------------------------------------------------------------
@@ -4811,11 +4767,11 @@ _BM1_TERMS_SQL = ", ".join(f"'{t}'" for t in _BM1_TERMS)
     LIMIT 10
     """,
 )
-def bm1_bm25_rank_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
+@checkpointed
+def bm1_bm25_rank_documents(h: Held, spark: SparkSession, sf_dir: str) -> DataFrame:
+    from agent_data_wrangler_spark.sources.readers import widen_scan
 
     k1, b = 1.2, 0.75
-    from agent_data_wrangler_spark.sources.readers import widen_scan
 
     d = read_table(spark, sf_dir, "documents")
     # r14-opt: widen the one-split local scan so the tokenize + explode
@@ -4835,14 +4791,13 @@ def bm1_bm25_rank_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("toks").cast("bigint").alias("dl"),
         F.explode("toks").alias("term"),
     ).filter(F.col("term").isin(*_BM1_TERMS))
-    # tf feeds BOTH the scored path and the df aggregate below; without a
-    # materialized persist Catalyst re-derives the tokenize+explode subtree
-    # for the df branch (2 Generates — the tf1 lesson). The frame is
-    # |docs matching a query term| × |terms| rows — query-bounded, tiny
-    # relative to the corpus.
-    tf = t2.groupBy("doc_id", "term").agg(
+    # tf feeds BOTH the scored path and the df aggregate below; uncached,
+    # Catalyst re-derives the tokenize+explode subtree for the df branch
+    # (2 Generates — the tf1 lesson). The frame is |docs matching a query
+    # term| × |terms| rows — query-bounded, tiny relative to the corpus.
+    tf = h.keep(t2.groupBy("doc_id", "term").agg(
         F.max("dl").alias("dl"), F.count(F.lit(1)).cast("bigint").alias("tf")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     tf.count()
     df = tf.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("__df")
@@ -5037,21 +4992,14 @@ def lk1_split_leakage_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # chain's ex⋈df self-reference plus the verify stage re-derive the
     # CPU-heavy tokenize+k-gram shingles from raw text up to three times
     # per run — measurable at sf10 where lk1 is the heaviest probe family.
-    from pyspark import StorageLevel
-
-    sh = dedup.shingle_frame(d, "doc_id", "text", k=3).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    sh.count()
     # The prefix engine checkpoints its output, so the (large) shingle
-    # cache is released the moment the pair set exists — at sf10 this
-    # frame is the heaviest thing lk1 would otherwise leak per call.
-    try:
+    # cache is released the moment the pair set exists.
+    with held() as h:
+        sh = h.keep(dedup.shingle_frame(d, "doc_id", "text", k=3))
+        sh.count()
         pairs = dedup.near_dup_pairs_prefix(
             d, "doc_id", "text", k=3, threshold=0.5, shingles_df=sh
         )
-    finally:
-        sh.unpersist()
     sp = hash_split(
         d.select("doc_id"), "doc_id", _LK1_FRACTIONS, salt="split-v1"
     )
@@ -5122,40 +5070,20 @@ def lk1_split_leakage_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s CROSS JOIN tot
     """,
 )
+@checkpointed
 def tw1_temperature_weights_documents(
-    spark: SparkSession, sf_dir: str
+    h: Held, spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    # The |sources|-row result is localCheckpoint'ed (eager, ~20 rows) so
-    # the persisted per-source aggregate can be unpersisted BEFORE
-    # returning — the pagerank pattern (r09 ADVICE): repeated invocations
-    # (bench min-of-2, full-registry sweeps, the driver's oracle pass)
-    # must not accumulate one leaked cache entry per call. The checkpoint
-    # re-materializes nothing afterwards: consumers get a flat
-    # ExistingRDD scan. The single-scan plan claim is pinned on the lazy
-    # frame (test_plan_shapes calls _tw1_frame directly).
-    per, lazy = _tw1_frame(spark, sf_dir)
-    try:
-        return lazy.localCheckpoint()
-    finally:
-        per.unpersist()
-
-
-def _tw1_frame(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(persisted per-source aggregate, lazy result frame) for tw1."""
-    from pyspark import StorageLevel
-
     d = read_table(spark, sf_dir, "documents")
-    # Persist the |sources|-row aggregate: without it Catalyst re-derives
+    # Keep the |sources|-row aggregate: without it Catalyst re-derives
     # the totals subtree from a SECOND full documents scan (the broadcast
     # side replans the lazy frame) — two passes over a 100 TB table for
     # two tiny aggregates. With the cache, the scan happens once and the
     # totals read |sources| rows (pinned in test_plan_shapes).
-    per = d.groupBy("source").agg(
+    per = h.keep(d.groupBy("source").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.sum("n_chars").cast("bigint").alias("n_chars"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     tot = per.agg(
         F.sum("n_docs").cast("double").alias("__n"),
         F.sum(F.sqrt(F.col("n_docs").cast("double"))).alias("__s2"),
@@ -5163,7 +5091,7 @@ def _tw1_frame(
     w = F.round(
         F.sqrt(F.col("n_docs").cast("double")) / F.col("__s2"), 6
     )
-    lazy = per.crossJoin(F.broadcast(tot)).select(
+    return per.crossJoin(F.broadcast(tot)).select(
         "source",
         "n_docs",
         "n_chars",
@@ -5175,7 +5103,6 @@ def _tw1_frame(
             "expected_docs"
         ),
     )
-    return per, lazy
 
 
 # ---------------------------------------------------------------------------
@@ -5597,12 +5524,10 @@ def _px1_oracle() -> str:
 
 
 @query("px1_bigram_xent_documents", oracle=_px1_oracle())
-def px1_bigram_xent_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark import StorageLevel
-
+@checkpointed
+def px1_bigram_xent_documents(h: Held, spark: SparkSession, sf_dir: str) -> DataFrame:
     from agent_data_wrangler_spark.operators import lm
     from agent_data_wrangler_spark.operators.splits import hash_split
-
     from agent_data_wrangler_spark.sources.readers import widen_scan
 
     d = read_table(spark, sf_dir, "documents")
@@ -5621,14 +5546,9 @@ def px1_bigram_xent_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tw1 lesson: the vocabulary-bounded model aggregate feeds TWO broadcast
     # subtrees (the bigram join and, via ctx, the context join); unpersisted,
     # Catalyst replans each from its own full train-scan tokenization pass.
-    # Persist the small frame, eagerly materialize the (eval-split-bounded)
-    # result, release before returning.
-    model = model.persist(StorageLevel.MEMORY_AND_DISK)
-    res = lm.score_bigram_xent(ev, model, ctx, vocab, "doc_id", "text")
-    try:
-        return res.localCheckpoint()
-    finally:
-        model.unpersist()
+    # Keep the small frame.
+    model = h.keep(model)
+    return lm.score_bigram_xent(ev, model, ctx, vocab, "doc_id", "text")
 
 
 # ---------------------------------------------------------------------------
@@ -6115,25 +6035,19 @@ def _li1_oracle() -> str:
     """
 
 
-def _li1_frames(
-    spark: SparkSession, sf_dir: str, cache: str = "none"
-) -> tuple[DataFrame, DataFrame]:
-    """li1's UN-checkpointed result plus the persisted profile frame —
-    split out so tests/test_plan_shapes.py can pin the WORKING plan (the
-    registry wrapper localCheckpoints, so PLANS.md shows a flat scan).
-
-    ``cache`` is the r13 second-scan trade study (NOTES_r13 §9): "none"
-    re-derives the gram pipeline per consumer, "grams" persists the
-    corpus-sized exploded gram frame, "dp" persists the bounded
-    (<= K_DOC rows/doc) eval rank frame that ng and cand otherwise each
-    re-derive. Measured isolated at sf1/sf10 (fresh JVM, min-of-2):
-    none 33.3/50.1 s, dp 35.0/53.4 s, grams 51.9/77.4 s — "none" STAYS
-    the default (the split filter pushes below the explode, so the two
-    split-side derivations together cost one corpus pass; caching the
-    gram frame trades that for a corpus-sized cache write, +55%). The
-    caller is responsible for unpersisting the returned profile frame;
-    "grams"/"dp" exist for the measurement harness."""
-    from pyspark import StorageLevel
+@query("li1_language_id_documents", oracle=_li1_oracle())
+@checkpointed
+def li1_language_id_documents(
+    h: Held, spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Only the profile frame is kept. The r13 second-scan trade study
+    (NOTES_r13 §9) measured the alternatives isolated at sf1/sf10 (fresh
+    JVM, min-of-2): re-deriving the gram pipeline per consumer 33.3/50.1 s,
+    caching the bounded eval rank frame ``dp`` 35.0/53.4 s, caching the
+    corpus-sized gram frame 51.9/77.4 s — the split filter pushes below
+    the explode, so the two split-side derivations together cost one
+    corpus pass, while caching the gram frame trades that for a
+    corpus-sized cache write (+55%)."""
     from pyspark.sql import Window
 
     from agent_data_wrangler_spark.operators.splits import hash_split
@@ -6173,8 +6087,6 @@ def _li1_frames(
             )
         ).alias("gram"),
     )
-    if cache == "grams":
-        grams = grams.persist(StorageLevel.MEMORY_AND_DISK)
     # Language profiles: |langs| x K_LANG rows — vocabulary-bounded, fit once
     # on the train split, broadcast into the distance join. Persisted because
     # the frame feeds THREE consumers (distance join, distinct-langs grid,
@@ -6185,7 +6097,7 @@ def _li1_frames(
         .groupBy("lang", "gram")
         .agg(F.count(F.lit(1)).alias("__n"))
     )
-    lp = (
+    lp = h.keep(
         lang_counts.withColumn(
             "rlang",
             F.row_number().over(
@@ -6194,7 +6106,6 @@ def _li1_frames(
         )
         .filter(F.col("rlang") <= _LI1_K_LANG)
         .select("lang", "gram", "rlang")
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     dp = (
         grams.filter(F.col("split") == "eval")
@@ -6209,8 +6120,6 @@ def _li1_frames(
         .filter(F.col("rdoc") <= _LI1_K_DOC)
         .select("doc_id", "gram", "rdoc")
     )
-    if cache == "dp":
-        dp = dp.persist(StorageLevel.MEMORY_AND_DISK)
     ng = dp.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_grams"))
     cand = (
         dp.join(F.broadcast(lp), "gram")
@@ -6249,19 +6158,9 @@ def _li1_frames(
         .filter(F.col("__rk") == 1)
         .select("lang_true", F.col("lang").alias("lang_pred"))
     )
-    res = pred.groupBy("lang_true", "lang_pred").agg(
+    return pred.groupBy("lang_true", "lang_pred").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     )
-    return res, lp
-
-
-@query("li1_language_id_documents", oracle=_li1_oracle())
-def li1_language_id_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res, lp = _li1_frames(spark, sf_dir)
-    try:
-        return res.localCheckpoint()
-    finally:
-        lp.unpersist()
 
 
 # ---------------------------------------------------------------------------
@@ -6360,14 +6259,11 @@ def _qf1_oracle() -> str:
     """
 
 
-def _qf1_frames(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, list[DataFrame]]:
-    """qf1's UN-checkpointed result plus the persisted frames (weight
-    frame + 1-row totals) — split out so tests/test_plan_shapes.py can pin
-    the WORKING plan; the caller unpersists every returned cache."""
-    from pyspark import StorageLevel
-
+@query("qf1_quality_classifier_documents", oracle=_qf1_oracle())
+@checkpointed
+def qf1_quality_classifier_documents(
+    h: Held, spark: SparkSession, sf_dir: str
+) -> DataFrame:
     from agent_data_wrangler_spark.operators.splits import hash_split
 
     d = read_table(spark, sf_dir, "documents")
@@ -6412,10 +6308,10 @@ def _qf1_frames(
     # separate pass over the exploded train tokens is gone (identical
     # integers; guide §1.2 "don't compute things twice").
     train_lab = lab.filter(F.col("split") == "train")
-    # Persisted (tw1): the 1-row frame feeds THREE broadcast consumers
+    # Kept (tw1): the 1-row frame feeds THREE broadcast consumers
     # (the weight fit, the prior, the unmatched-penalty term) — each would
     # otherwise replan the full labeled-corpus scan into its subtree.
-    totals = train_lab.agg(
+    totals = h.keep(train_lab.agg(
         F.coalesce(
             F.sum(F.when(F.col("is_hi"), F.size("toks"))), F.lit(0)
         ).alias("n_hi"),
@@ -6424,14 +6320,14 @@ def _qf1_frames(
         ).alias("n_lo"),
         F.count(F.when(F.col("is_hi"), 1)).alias("d_hi"),
         F.count(F.when(~F.col("is_hi"), 1)).alias("d_lo"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ))
     tot = totals.select("n_hi", "n_lo")
     dtot = totals.select("d_hi", "d_lo")
-    # Closed-form naive-Bayes weights: <= B rows. Persisted — the frame
-    # feeds the eval-score broadcast join, and unpersisted Catalyst would
-    # replan the full train-token aggregation into the broadcast subtree
-    # (the tw1 lesson).
-    w = (
+    # Closed-form naive-Bayes weights: <= B rows. Kept — the frame feeds
+    # the eval-score broadcast join, and uncached Catalyst would replan
+    # the full train-token aggregation into the broadcast subtree (the
+    # tw1 lesson).
+    w = h.keep(
         train_tok.groupBy("b")
         .agg(
             F.count(F.when(F.col("is_hi"), 1)).alias("c_hi"),
@@ -6445,7 +6341,6 @@ def _qf1_frames(
                 - F.log((F.col("c_lo") + 1.0) / (F.col("n_lo") + _QF1_B))
             ).alias("w"),
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     docsum = (
         tok.filter(F.col("split") == "eval")
@@ -6478,23 +6373,12 @@ def _qf1_frames(
             ).alias("score"),
         )
     )
-    res = scored.groupBy(
+    return scored.groupBy(
         "is_hi_true", (F.col("score") > 0).alias("pred_hi")
     ).agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs"),
         F.round(F.avg("score"), 4).alias("avg_score"),
     )
-    return res, [w, totals]
-
-
-@query("qf1_quality_classifier_documents", oracle=_qf1_oracle())
-def qf1_quality_classifier_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    res, caches = _qf1_frames(spark, sf_dir)
-    try:
-        return res.localCheckpoint()
-    finally:
-        for c in caches:
-            c.unpersist()
 
 
 # ---------------------------------------------------------------------------

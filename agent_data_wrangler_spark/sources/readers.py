@@ -163,9 +163,9 @@ def widen_scan(df: DataFrame) -> DataFrame:
     sums, hashes, min/max) — double-summing pipelines keep their scan
     layout so partial-sum order stays put.
 
-    Promoted from operators/dedup.py `_widen` (which now delegates here)
-    so the non-dedup corpus passes — li1's gram pipeline, rs1's positional
-    n-grams, simhash/winnowing profiles — share the same floor.
+    Shared by the dedup operators and the non-dedup corpus passes — li1's
+    gram pipeline, rs1's positional n-grams, simhash/winnowing profiles —
+    so every one gets the same floor.
     """
     target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:

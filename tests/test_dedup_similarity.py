@@ -459,23 +459,45 @@ def test_blocked_editdist_max_block_size_guard(spark):
     assert (r0.n_blocks_refined, r0.n_blocks_skipped, r0.n_rows_skipped) == (0, 0, 0)
 
 
-def test_dedup_queries_release_every_persist(spark):
-    """r10 self-review: ss1/lk1/n5 persist shingle/pair build frames but
-    return small checkpointed results — every invocation must leave the
-    cache manager EMPTY (the tw1/pagerank teardown contract), or bench
-    min-of-2 and full-registry sweeps accumulate multi-hundred-MB entries
-    at sf10."""
-    from agent_data_wrangler_spark.queryset_nstar import QUERIES as Q2
+# Every registry query that caches a frame while it runs. Each must leave
+# the cache manager EMPTY once its caller has collected the result.
+_PERSISTING_QUERIES = (
+    "p5a_describe_approx_lineitem", "sub7_key_part_revenue_share",
+    "wa1_weekly_active_users_events", "ks1_ks_drift_events",
+    "tr1_triangle_count", "n5_minhash_neardup_documents",
+    "n7_lsh_topk_embeddings", "n8_embedding_neardup_pairs",
+    "n9_ivf_topk_embeddings", "n10_lsh_pruned_topk_embeddings",
+    "n11_ivf_pruned_topk_embeddings", "n12_incremental_neardup_documents",
+    "kl1_source_drift_documents", "gr1_pagerank_trade_graph",
+    "cl1_label_centroid_confusion", "bp2_bpe_merge_apply_documents",
+    "bp3_bpe_train_documents", "ss1_prefix_jaccard_documents",
+    "pq1_pq_topk_embeddings", "bm1_bm25_rank_documents",
+    "lk1_split_leakage_documents", "tw1_temperature_weights_documents",
+    "px1_bigram_xent_documents", "li1_language_id_documents",
+    "qf1_quality_classifier_documents",
+)
 
+
+def test_dedup_queries_release_every_persist(spark, tmp_path, monkeypatch):
+    """Every query that caches a frame (operators/held.py) must leave the
+    cache manager EMPTY after its result is collected: a long-lived
+    session serves many calls, and a leaked entry per call accumulates
+    (multi-hundred-MB entries at sf10). A fresh trade-graph cache dir
+    makes tr1/gr1 run their rollup build too."""
+    from __spark_entry__ import queries
+
+    monkeypatch.setenv("ADW_CACHE_DIR", str(tmp_path / "cache"))
+    q = queries()
     sf = "/root/testdata/sf0.001"
-    for name in ("ss1_prefix_jaccard_documents",
-                 "lk1_split_leakage_documents",
-                 "n5_minhash_neardup_documents"):
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    leaked = []
+    for name in _PERSISTING_QUERIES:
         spark.catalog.clearCache()
-        assert Q2[name](spark, sf).count() >= 0
-        assert spark._jsparkSession.sharedState().cacheManager().isEmpty(), \
-            f"{name} leaked cache entries"
+        q[name](spark, sf).collect()
+        if not cm.isEmpty():
+            leaked.append(name)
     spark.catalog.clearCache()
+    assert not leaked, f"queries leaked cache entries: {leaked}"
 
 
 def test_band_key_packing_is_exact(spark):

@@ -135,17 +135,22 @@ def test_graph_queries_scan_the_rollup(spark, sf_dir):
     scan the small materialized edge tables — lineitem never reappears in
     a per-query plan."""
     from __spark_entry__ import queries
+    from agent_data_wrangler_spark.operators.held import held
 
     derived.trade_graph_tables(spark, str(sf_dir))  # pay the build once
     for name in ("tr1_triangle_count", "rx1_recursive_reachability",
                  "dg1_cosupply_rollup_topk", "dg2_trade_edges_checksum"):
         q = queries()[name]
-        df = q(spark, str(sf_dir))
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        # tr1 checkpoints its result: read its WORKING plan, built inside
+        # a live scope, instead of the flat checkpoint.
+        build = getattr(q, "__wrapped__", None)
+        with held() as h:
+            df = build(h, spark, str(sf_dir)) if build else q(spark, str(sf_dir))
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            files = df.inputFiles()
         # tr1's plan text carries the rollup path in its cached subtrees;
         # rx1's UnionLoop elides relation paths, but inputFiles() resolves
         # them — accept either witness, and ban lineitem in both.
-        files = df.inputFiles()
         assert ("adw_trade_graph_" in plan
                 or (files and all("adw_trade_graph_" in f for f in files))
                 ), (name, plan, files)

@@ -9,13 +9,20 @@ import pytest
 
 from __spark_entry__ import queries
 from agent_data_wrangler_spark.operators import similarity as similarity_ops
+from agent_data_wrangler_spark.operators.held import held
 
 QUERIES = queries()
 
 
 def _plan(spark, name, sf_dir) -> str:
+    """The query's executed plan. For an entry declared ``checkpointed``
+    (its flat checkpoint hides the plan) this is the WORKING plan: the
+    un-checkpointed build, planned while its kept frames are cached."""
     q = QUERIES[name]
-    return q(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    with held() as h:
+        build = getattr(q, "__wrapped__", None)
+        df = build(h, spark, sf_dir) if build else q(spark, sf_dir)
+        return df._jdf.queryExecution().executedPlan().toString()
 
 
 def _final_plan(spark, name, sf_dir) -> str:
@@ -1173,13 +1180,12 @@ def test_tw1_single_scan_and_broadcast_totals(spark, sf_dir):
     the registry entry checkpoints + unpersists so repeated invocations
     leak zero cache entries."""
     from agent_data_wrangler_spark.queryset_nstar import (
-        _tw1_frame, tw1_temperature_weights_documents)
+        tw1_temperature_weights_documents)
 
     spark.catalog.clearCache()
-    # Single-scan claim, pinned on the LAZY frame (the registry entry
+    # Single-scan claim, pinned on the WORKING plan (the registry entry
     # checkpoints it away into an ExistingRDD scan).
-    per, lazy = _tw1_frame(spark, str(sf_dir))
-    plan = lazy._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(spark, "tw1_temperature_weights_documents", str(sf_dir))
     # BOTH consumers (per-source rows and the totals subtree) read the
     # cached aggregate; the FileScan text recurs under each
     # InMemoryTableScan only because plan printing repeats the cached
@@ -1188,7 +1194,6 @@ def test_tw1_single_scan_and_broadcast_totals(spark, sf_dir):
     assert "ReadSchema: struct<source:string,n_chars:bigint>" in plan, plan
     assert plan.count("BroadcastNestedLoopJoin") == 1, plan
     assert "CartesianProduct" not in plan
-    per.unpersist()
 
     # Leak-free contract on the registry entry: flat checkpointed result,
     # nothing left in the cache manager.
@@ -1274,29 +1279,11 @@ def test_px1_model_persist_feeds_both_broadcast_consumers(spark, sf_dir):
     the (w1,w2) bigram join and the ctx aggregate — must both read the
     InMemoryRelation instead of replanning separate train-scan tokenization
     passes (the tw1 broadcast-subtree lesson)."""
-    from pyspark import StorageLevel
-
-    from agent_data_wrangler_spark.operators import lm
-    from agent_data_wrangler_spark.operators.splits import hash_split
-    from agent_data_wrangler_spark.queryset_nstar import _PX1_SALT, _PX1_SPLIT
-    from agent_data_wrangler_spark.sources.readers import read_table
-    from pyspark.sql import functions as F
-
-    d = read_table(spark, sf_dir, "documents")
-    split = hash_split(d, "doc_id", _PX1_SPLIT, salt=_PX1_SALT)
-    train = split.filter(F.col("split") == "train")
-    ev = split.filter(F.col("split") == "eval")
-    model, ctx, vocab = lm.bigram_lm(train, "doc_id", "text")
-    model = model.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        res = lm.score_bigram_xent(ev, model, ctx, vocab, "doc_id", "text")
-        plan = res._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("InMemoryTableScan") >= 2, plan
-        # the eval scan is the only remaining documents read feeding the
-        # bigram stream side (model + ctx come from the cache)
-        assert "CartesianProduct" not in plan
-    finally:
-        model.unpersist()
+    plan = _plan(spark, "px1_bigram_xent_documents", sf_dir)
+    assert plan.count("InMemoryTableScan") >= 2, plan
+    # the eval scan is the only remaining documents read feeding the
+    # bigram stream side (model + ctx come from the cache)
+    assert "CartesianProduct" not in plan
 
 
 def test_li1_profiles_broadcast_and_cached(spark, sf_dir):
@@ -1306,33 +1293,20 @@ def test_li1_profiles_broadcast_and_cached(spark, sf_dir):
     cache, the distance join must broadcast it, and the |langs|-row grid
     crossJoin is the only nested-loop (bounded broadcast, never
     CartesianProduct)."""
-    from agent_data_wrangler_spark.queryset_nstar import _li1_frames
-
-    res, lp = _li1_frames(spark, sf_dir)
-    try:
-        plan = res._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("InMemoryTableScan") >= 2, plan
-        assert "BroadcastHashJoin" in plan
-        assert "CartesianProduct" not in plan
-    finally:
-        lp.unpersist()
+    plan = _plan(spark, "li1_language_id_documents", sf_dir)
+    assert plan.count("InMemoryTableScan") >= 2, plan
+    assert "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_qf1_weights_broadcast_and_cached(spark, sf_dir):
     """qf1's WORKING plan: the persisted <=1024-row naive-Bayes weight frame
     must be read from cache (not replanned into the broadcast subtree — the
     tw1 lesson) and the eval-token scoring join must broadcast it."""
-    from agent_data_wrangler_spark.queryset_nstar import _qf1_frames
-
-    res, caches = _qf1_frames(spark, sf_dir)
-    try:
-        plan = res._jdf.queryExecution().executedPlan().toString()
-        assert "InMemoryTableScan" in plan, plan
-        assert "BroadcastHashJoin" in plan
-        assert "CartesianProduct" not in plan
-    finally:
-        for c in caches:
-            c.unpersist()
+    plan = _plan(spark, "qf1_quality_classifier_documents", sf_dir)
+    assert "InMemoryTableScan" in plan, plan
+    assert "BroadcastHashJoin" in plan
+    assert "CartesianProduct" not in plan
 
 
 def test_p5a_envelope_counts_not_exact_percentile(spark, sf_dir):
@@ -1343,14 +1317,8 @@ def test_p5a_envelope_counts_not_exact_percentile(spark, sf_dir):
     (the fixed-size sketch) is the only percentile in the plan."""
     import re
 
-    from agent_data_wrangler_spark.queryset import _p5a_frames
-
-    res, approx = _p5a_frames(spark, sf_dir)
-    try:
-        plan = res._jdf.queryExecution().executedPlan().toString()
-        assert "percentile_approx" in plan, plan
-        assert not re.search(r"(?<!_)percentile\(", plan), plan
-        assert "InMemoryTableScan" in plan
-        assert "CartesianProduct" not in plan
-    finally:
-        approx.unpersist()
+    plan = _plan(spark, "p5a_describe_approx_lineitem", sf_dir)
+    assert "percentile_approx" in plan, plan
+    assert not re.search(r"(?<!_)percentile\(", plan), plan
+    assert "InMemoryTableScan" in plan
+    assert "CartesianProduct" not in plan

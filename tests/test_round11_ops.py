@@ -1,5 +1,4 @@
-"""Round-11 additions: IVF layout freshness stats + audit (ix1 surface) and
-the persist-audit settle poll.
+"""Round-11 additions: IVF layout freshness stats + audit (ix1 surface).
 
 The sd1/ix1 QUERY semantics are pinned by tests/test_oracle_parity.py (both
 have full DuckDB oracles); these units pin the operator-level contracts the
@@ -165,53 +164,3 @@ def test_audit_without_stats_sidecar(spark, layout):
     rep = similarity.audit_ivf_layout(spark, path, df, id_col="vec_id")
     assert rep["stats_ok"] is None
     assert rep["fresh_ok"] is True
-
-
-def test_settled_cache_stats_waits_out_async_unpersist(spark, sf_dir):
-    """tools/persist_audit.py settle poll: a non-blocking unpersist right
-    before the snapshot must not leave phantom entries (the r10-verdict
-    negative-row misattribution). Asserted by IDENTITY, not absolute
-    emptiness — in a full-suite run the shared session carries other
-    tests' lingering localCheckpoint blocks."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from persist_audit import _settled_storage_infos
-
-    base = _settled_storage_infos(spark)
-    df = spark.range(10000).persist()
-    df.count()
-    new_ids = set(_settled_storage_infos(spark)) - set(base)
-    assert len(new_ids) == 1
-    df.unpersist(blocking=False)
-    settled = _settled_storage_infos(spark)
-    assert not (new_ids & set(settled))
-
-
-def test_identity_attribution_ignores_lingering_foreign_blocks(spark):
-    """tools/persist_audit.py identity sweep: a query is charged only RDD
-    ids added between its settled start and settled end — a pre-existing
-    (e.g. lingering localCheckpoint) block must not be re-charged, and its
-    later GC must not produce a negative row (the r11 regen artifacts)."""
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
-    from persist_audit import _settled_storage_infos
-
-    base = _settled_storage_infos(spark)
-    foreign = spark.range(5000).persist()
-    foreign.count()
-    before = _settled_storage_infos(spark)
-    foreign_ids = set(before) - set(base)
-    assert len(foreign_ids) == 1
-
-    mine = spark.range(200, 9000).persist()
-    mine.count()
-    after = _settled_storage_infos(spark)
-    added = {rid: b for rid, b in after.items() if rid not in before}
-    # exactly one new frame; the pre-existing (foreign) block never charged
-    assert len(added) == 1 and not (set(added) & foreign_ids)
-    assert all(b >= 0 for b in added.values())
-
-    foreign.unpersist(blocking=True)
-    mine.unpersist(blocking=True)

@@ -34,6 +34,7 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as entry
+    from agent_data_wrangler_spark.operators.held import held
 
     queries = entry.queries()
     features = (
@@ -51,8 +52,12 @@ def main() -> None:
     rows, errors = [], []
     for name in sorted(queries):
         try:
-            df = queries[name](spark, sf_dir)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            # a checkpointed entry is audited on its working plan
+            build = getattr(queries[name], "__wrapped__", None)
+            with held() as h:
+                df = (build(h, spark, sf_dir) if build
+                      else queries[name](spark, sf_dir))
+                plan = df._jdf.queryExecution().executedPlan().toString()
             rows.append(
                 (name, [plan.count(tag) for tag, _ in features])
             )
@@ -71,11 +76,11 @@ def main() -> None:
             "cartesian products (banned — always 0). Counts include the "
             "repeated text of cached-plan children, so treat them as upper "
             "bounds; the enforced pins live in tests/test_plan_shapes.py. "
-            "Queries that eagerly materialize via localCheckpoint to "
-            "release persisted frames before returning (the tw1/r10 "
-            "teardown pattern — n5, lk1, sd1, px1, ...) show the FLAT "
-            "post-checkpoint scan here (all-zero rows); their working "
-            "plans are pinned by per-query tests in "
+            "Entries declared `checkpointed` (operators/held.py: tw1, "
+            "px1, n5, ...) are audited on their working plan; queries "
+            "whose operators checkpoint internally (lk1, ss1, sd1, ...) "
+            "show the FLAT post-checkpoint scan here (all-zero rows), and "
+            "their working plans are pinned by per-query tests in "
             "tests/test_plan_shapes.py instead.\n\n"
             "| query | shuf | single | range | bcast | smj | gen | cache "
             "| topk | bnlj | cart |\n"
