@@ -202,14 +202,24 @@ def _pagerank_body(
     if broadcast_max_nodes is None:
         broadcast_max_nodes = _derived_broadcast_guard(
             edges_deg.sparkSession)
-    # Node universe = src ∪ dst (a dst-only node is a dangling node: it
-    # holds rank and must receive the base + dangling terms each round).
+    # Node universe = src ∪ dst, each node flagged with whether it has an
+    # out-edge (a dst-only node is a dangling node: it holds rank and must
+    # receive the base + dangling terms each round). One aggregate over
+    # the kept universe gives both |N| and the dangling count: the setup
+    # is one job, and the node set is static, so the dangling set is
+    # never re-derived inside the loop.
     nodes = h.keep(
-        edges_deg.select(F.col("src").alias("node"))
-        .unionByName(edges_deg.select(F.col("dst").alias("node")))
-        .distinct()
+        edges_deg.select(F.col("src").alias("node"), F.lit(1).alias("out"))
+        .unionByName(
+            edges_deg.select(F.col("dst").alias("node"), F.lit(0).alias("out")))
+        .groupBy("node")
+        .agg(F.max("out").alias("out"))
     )
-    n_nodes = float(nodes.count())
+    stats = nodes.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.count(F.when(F.col("out") == 0, 1)).alias("dangling"),
+    ).first()
+    n_nodes = float(stats["n"])
     if n_nodes == 0:
         raise ValueError(
             "pagerank: graph has no edges — PageRank over an empty node set "
@@ -233,22 +243,15 @@ def _pagerank_body(
     else:
         tvec = F.lit(1.0 / n_nodes)
 
-    # The node set is static, so the DANGLING set (nodes with no out-edges)
-    # is computed ONCE — never re-derive the |E|→|V| distinct inside the
-    # loop — and probed for emptiness once. On a symmetrized graph (gr1) or
-    # any graph where every node has out-edges, the set is EMPTY and the
+    # On a symmetrized graph (gr1) or any graph where every node has
+    # out-edges, the DANGLING set (nodes with no out-edges) is EMPTY and the
     # dangle term is dropped from the update entirely: the term's 1-row
     # broadcast re-executes the previous iteration's lineage as a broadcast
     # subtree in fused (un-checkpointed) step chains, which is quadratic in
     # fused-iteration count — measurable 3x on gr1 — for a value that is
     # identically zero.
-    dangling = h.keep(
-        nodes.join(edges_deg, nodes["node"] == edges_deg["src"], "left_anti")
-        .select("node")
-    )
-    has_dangling = not dangling.isEmpty()
-    if not has_dangling:
-        h.drop(dangling)
+    has_dangling = stats["dangling"] > 0
+    dangling = nodes.filter(F.col("out") == 0).select("node")
 
     # Iteration-join strategy (see pagerank docstring). Spark's own
     # autoBroadcast threshold (10 MB default) is far below any real rank
@@ -259,15 +262,15 @@ def _pagerank_body(
     # shuffles.
     broadcast_ranks = n_nodes <= broadcast_max_nodes
     if not broadcast_ranks:
+        # A NUMBERED repartition: AQE coalesces a kept frame's unnumbered
+        # one, and the rank side's default-sized shuffle would then no
+        # longer match the cached layout, re-shuffling |E| per step.
+        n_parts = int(edges_deg.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions"))
         iter_edges = h.keep(
-            edges_deg.repartition("src").sortWithinPartitions("src")
+            edges_deg.repartition(n_parts, "src").sortWithinPartitions("src")
         )
         iter_edges.count()  # materialize, then drop the unsorted copy
-        if has_dangling:
-            # isEmpty above only touched the first partitions; fill the
-            # dangling cache fully while its edges_deg lineage is still
-            # cached, or the per-iteration semi-join would re-derive it.
-            dangling.count()
         h.drop(edges_deg)
     else:
         iter_edges = edges_deg
@@ -278,13 +281,18 @@ def _pagerank_body(
 
     def step(r: DataFrame) -> DataFrame:
         rr = F.broadcast(r) if broadcast_ranks else r
-        contrib = (
+        # One groupBy over the contributions plus a zero row per node: a
+        # node nobody links to still gets its base term, with no per-step
+        # join against the node set (x + 0.0 == x, so sums are unchanged).
+        out = (
             iter_edges.join(rr, iter_edges["src"] == rr["node"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("r") * F.col("w") / F.col("d")).alias("c"))
+            .select(F.col("dst").alias("node"),
+                    (F.col("r") * F.col("w") / F.col("d")).alias("c"))
+            .unionByName(nodes.select("node", F.lit(0.0).alias("c")))
+            .groupBy("node")
+            .agg(F.sum("c").alias("c"))
         )
-        out = nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-        mass = F.coalesce(F.col("c"), F.lit(0.0))
+        mass = F.col("c")
         # Uniform case keeps the LITERAL tp/n and dm/n forms — tp*(1/n) is
         # not IEEE-identical to tp/n, and gr1's oracle unrolls the /n form.
         if has_dangling:
@@ -315,7 +323,7 @@ def _pagerank_body(
     # The returned frame is an eagerly-materialized localCheckpoint (an
     # ExistingRDD scan) that no longer depends on the kept build frames,
     # so pagerank's scope releases them before returning.
-    # The operator already paid the nodes.count() job, so the result frame
+    # The operator already paid the node-count job, so the result frame
     # carries it as a plain Python attribute (``pagerank_n_nodes``) —
     # callers that need N for scaling (gr1's rank*N display) reuse it
     # instead of re-counting the checkpointed frame (one job saved per

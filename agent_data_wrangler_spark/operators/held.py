@@ -33,6 +33,21 @@ The rules the call sites follow:
 
 There is one storage level, MEMORY_AND_DISK: a kept frame spills to disk
 instead of recomputing when executor memory runs short.
+
+A kept frame takes AQE-sized partitions, like any uncached shuffle: the
+session sets ``spark.sql.optimizer.canChangeCachedPlanOutputPartitioning``,
+so a kept ``groupBy`` over a few KB is cached in one or two partitions, not
+``spark.sql.shuffle.partitions`` of them, and every scan of it runs that
+many tasks. A numbered ``repartition(n, ...)`` is never coalesced; keep one
+when a later join must read the cached layout in place (pagerank's sorted
+edges).
+
+What the scope does not bound: a returned ``localCheckpoint`` stays in
+``SparkContext.getPersistentRDDs()`` until the caller's frame is
+garbage-collected, so a count of those entries after a call moves with GC
+timing, not with what the call cached. The leak check is therefore the
+cache manager (``sharedState().cacheManager().isEmpty()`` once the caller
+has collected), never the persistent-RDD count.
 """
 
 from __future__ import annotations

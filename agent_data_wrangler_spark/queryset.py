@@ -5292,9 +5292,9 @@ def tr1_triangle_count(h: Held, spark: SparkSession, sf_dir: str) -> DataFrame:
     # The (s1, s2, w) co-supply pair weights come from the MATERIALIZED
     # rollup (plans/derived.py): the within-order pair expansion + count
     # was tr1's dominant cost and the reason its sf1→sf10 ratio grew
-    # (SCALING.md r09) — one build amortizes across tr1/rx1/gr1 and
+    # (SCALING.md r09) — one build amortizes across tr1/rx1/dg1 and
     # across repeated invocations; tr1 starts at the thresholding step.
-    _, pairs = trade_graph_tables(spark, sf_dir)
+    pairs = trade_graph_tables(spark, sf_dir, "cosupply_pairs")
     tot = pairs.agg(F.expr("percentile(w, 0.9)").alias("q"))
     edges = h.keep(
         pairs.crossJoin(F.broadcast(tot))
@@ -5425,7 +5425,7 @@ _RX1_SPARK_SQL = "WITH RECURSIVE\n" + _RX1_RECURSIVE_SQL
 def rx1_recursive_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agent_data_wrangler_spark.plans.derived import trade_graph_tables
 
-    _, pairs = trade_graph_tables(spark, sf_dir)
+    pairs = trade_graph_tables(spark, sf_dir, "cosupply_pairs")
     # Re-register per call (metadata-only): the view must track sf_dir —
     # a lingering binding from another scale factor would silently cross
     # datasets.

@@ -3026,12 +3026,12 @@ def gr1_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # MATERIALIZED rollup (plans/derived.py): the orders⋈lineitem pair
     # expansion + distinct was gr1's dominant cost and the reason its
     # sf1→sf10 ratio grew (SCALING.md r09) — one build now amortizes
-    # across gr1/tr1/rx1 and across repeated invocations. Node ids are
+    # across gr1/dg2 and across repeated invocations. Node ids are
     # already the BIGINT encoding (customer 2k, supplier 2k+1): every
     # distinct/join/shuffle hashes 8-byte longs, not "c123" strings
     # (measured ~2x on the edge build); the display label is formatted
     # once at output, after the graph math is done.
-    e0, _ = trade_graph_tables(spark, sf_dir)
+    e0 = trade_graph_tables(spark, sf_dir, "trade_edges")
     edges = e0.unionByName(
         e0.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -3082,7 +3082,7 @@ def gr1_pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dg1_cosupply_rollup_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agent_data_wrangler_spark.plans.derived import trade_graph_tables
 
-    _, pairs = trade_graph_tables(spark, sf_dir)
+    pairs = trade_graph_tables(spark, sf_dir, "cosupply_pairs")
     return (
         pairs.orderBy(F.col("w").desc(), F.col("s1").asc(), F.col("s2").asc())
         .limit(20)
@@ -3106,7 +3106,7 @@ def dg1_cosupply_rollup_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dg2_trade_edges_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from agent_data_wrangler_spark.plans.derived import trade_graph_tables
 
-    edges, _ = trade_graph_tables(spark, sf_dir)
+    edges = trade_graph_tables(spark, sf_dir, "trade_edges")
     return edges.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_edges"),
         F.count_distinct("src").cast("bigint").alias("n_customers"),

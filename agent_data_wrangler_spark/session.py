@@ -44,6 +44,11 @@ _DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
+    # Let AQE coalesce a cached plan's output too. Spark leaves this off,
+    # and then a frame held.keep persists has one partition per configured
+    # shuffle partition: 32 tasks to scan a few KB, on every read of it.
+    # Numbered repartitions are never coalesced.
+    "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning": "true",
     # Arrow-batched transfer for any Python crossing (pandas_udf, toPandas).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Deterministic timestamp semantics (parity with the DuckDB oracle, which

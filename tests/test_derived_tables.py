@@ -1,7 +1,9 @@
-"""plans/derived.py — the materialized trade-graph rollup shared by
-gr1/tr1/rx1 (r09 directive: their decade ratios grew because each query
-re-derived the orders⋈lineitem pair expansion per invocation)."""
+"""plans/derived.py — the materialized trade-graph rollup read by
+gr1/dg2 (trade_edges) and tr1/rx1/dg1 (cosupply_pairs) (r09 directive:
+their decade ratios grew because each query re-derived the orders⋈lineitem
+pair expansion per invocation)."""
 
+import fcntl
 import os
 import shutil
 import tempfile
@@ -15,26 +17,38 @@ from agent_data_wrangler_spark.sources.readers import read_table
 
 @pytest.fixture(autouse=True)
 def _fresh_memo():
-    """Each test sees clean memos, and never poisons another test's; the
-    scratch layouts a test staged are removed with its memo entries."""
-    saved = dict(derived._TRADE_GRAPH)
+    """Each test sees a clean staging memo, and never poisons another
+    test's; the scratch layouts a test staged are removed with its memo
+    entries."""
     saved_staged = dict(derived._STAGED)
-    derived._TRADE_GRAPH.clear()
     derived._STAGED.clear()
     yield
-    derived._TRADE_GRAPH.clear()
-    derived._TRADE_GRAPH.update(saved)
     for _ident, base, _value in derived._STAGED.values():
         shutil.rmtree(base, ignore_errors=True)
     derived._STAGED.clear()
     derived._STAGED.update(saved_staged)
 
 
+def _next_job(spark) -> int:
+    nxt = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    return nxt if isinstance(nxt, int) else nxt.get()
+
+
+def _copy_sources(sf_dir, tmp_path):
+    src = tmp_path / "sf"
+    src.mkdir()
+    for t in ("lineitem", "orders"):
+        shutil.copy(os.path.join(str(sf_dir), f"{t}.parquet"),
+                    src / f"{t}.parquet")
+    return src
+
+
 def test_rollup_matches_direct_derivation(spark, sf_dir):
     """The materialized tables must be row-for-row identical to the
     from-scratch derivation the queries used to inline — the rollup is a
     cache, never a semantic change."""
-    edges, pairs = derived.trade_graph_tables(spark, str(sf_dir))
+    edges = derived.trade_graph_tables(spark, str(sf_dir), "trade_edges")
+    pairs = derived.trade_graph_tables(spark, str(sf_dir), "cosupply_pairs")
 
     li = read_table(spark, str(sf_dir), "lineitem").select(
         "l_orderkey", "l_suppkey")
@@ -62,56 +76,110 @@ def test_rollup_matches_direct_derivation(spark, sf_dir):
 
 
 def test_rollup_memoizes_and_cleans_up(spark, sf_dir):
-    """One build per (session, source identity): the second call reads the
-    same parquet artifact (identical input files, no rewrite), and the
-    build's temporary persist is released (the graph operators' ledger
+    """One build per source identity: a repeat call reads the same parquet
+    artifact (identical input files, no rewrite) and runs no Spark job,
+    and no build leaves a cache entry behind (the graph operators' ledger
     contract)."""
     spark.catalog.clearCache()
-    e1, p1 = derived.trade_graph_tables(spark, str(sf_dir))
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    for table in ("trade_edges", "cosupply_pairs"):
+        first = derived.trade_graph_tables(spark, str(sf_dir), table)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
-    first_paths = derived._TRADE_GRAPH[derived._cache_dir(str(sf_dir))]
-    mtimes = {
-        os.path.join(d, f): os.path.getmtime(os.path.join(d, f))
-        for d in first_paths for f in os.listdir(d)
-    }
-    e2, p2 = derived.trade_graph_tables(spark, str(sf_dir))
-    assert derived._TRADE_GRAPH[derived._cache_dir(str(sf_dir))] \
-        == first_paths
-    assert set(e2.inputFiles()) == set(e1.inputFiles())
-    assert set(p2.inputFiles()) == set(p1.inputFiles())
-    for p, t in mtimes.items():
-        assert os.path.getmtime(p) == t, (
-            f"memoized call rewrote the artifact: {p}")
+        path = derived._cache_dir(str(sf_dir), table)
+        mtimes = {f: os.path.getmtime(os.path.join(path, f))
+                  for f in os.listdir(path)}
+        jobs = _next_job(spark)
+        again = derived.trade_graph_tables(spark, str(sf_dir), table)
+        assert _next_job(spark) == jobs, f"{table}: a hit ran a Spark job"
+        assert set(again.inputFiles()) == set(first.inputFiles())
+        for f, t in mtimes.items():
+            assert os.path.getmtime(os.path.join(path, f)) == t, (
+                f"memoized call rewrote the artifact: {path}/{f}")
 
 
 def test_rollup_rebuilds_on_source_mutation(spark, sf_dir, tmp_path):
     """A regenerated source (same directory, new file content/mtime) must
-    trigger a REBUILD, never a stale read — the cache key and the session
-    memo are both derived from per-file source identity, so in-place
-    re-generation mid-session (a gen_sf re-run) changes the key."""
-    import shutil as sh
-
-    src = tmp_path / "sf"
-    src.mkdir()
-    for t in ("lineitem", "orders"):
-        sh.copy(os.path.join(str(sf_dir), f"{t}.parquet"),
-                src / f"{t}.parquet")
-    base1 = derived._cache_dir(str(src))
-    e1, _ = derived.trade_graph_tables(spark, str(src))
-    files1 = set(e1.inputFiles())
+    trigger a REBUILD, never a stale read — the cache key is derived from
+    per-file source identity, so in-place re-generation mid-session (a
+    gen_sf re-run) changes the key of every table built from it."""
+    src = _copy_sources(sf_dir, tmp_path)
+    before = {t: derived._cache_dir(str(src), t)
+              for t in ("trade_edges", "cosupply_pairs")}
+    files1 = {t: set(derived.trade_graph_tables(spark, str(src), t)
+                     .inputFiles()) for t in before}
 
     # In-place rewrite: same path, new mtime (content identical is fine —
     # identity is (mtime, size), the conservative side).
     os.utime(src / "lineitem.parquet", ns=(1, 1))
-    base2 = derived._cache_dir(str(src))
-    assert base2 != base1, "source mutation did not change the cache key"
-    e2, _ = derived.trade_graph_tables(spark, str(src))
-    assert set(e2.inputFiles()) != files1, (
-        "mutated source was served the stale rollup artifact")
-    assert base2 in derived._TRADE_GRAPH
-    for b in (base1, base2):
-        sh.rmtree(b, ignore_errors=True)
+    for t, base1 in before.items():
+        base2 = derived._cache_dir(str(src), t)
+        assert base2 != base1, f"{t}: source mutation kept the cache key"
+        files2 = set(derived.trade_graph_tables(spark, str(src), t)
+                     .inputFiles())
+        assert files2 != files1[t], (
+            f"{t}: mutated source was served the stale rollup artifact")
+        assert derived._complete(base2)
+        for b in (base1, base2):
+            shutil.rmtree(b, ignore_errors=True)
+
+
+def test_orders_rewrite_rebuilds_only_trade_edges(spark, sf_dir, tmp_path):
+    """Each table is keyed on only the sources its build reads:
+    cosupply_pairs comes from lineitem alone, so rewriting orders in place
+    rebuilds trade_edges and still serves the same pair artifact."""
+    src = _copy_sources(sf_dir, tmp_path)
+    edges1 = set(derived.trade_graph_tables(spark, str(src), "trade_edges")
+                 .inputFiles())
+    pairs1 = set(derived.trade_graph_tables(spark, str(src), "cosupply_pairs")
+                 .inputFiles())
+
+    os.utime(src / "orders.parquet", ns=(1, 1))
+    edges2 = set(derived.trade_graph_tables(spark, str(src), "trade_edges")
+                 .inputFiles())
+    jobs = _next_job(spark)
+    pairs2 = set(derived.trade_graph_tables(spark, str(src), "cosupply_pairs")
+                 .inputFiles())
+    assert edges2 != edges1, "orders rewrite served the stale trade_edges"
+    assert pairs2 == pairs1 and _next_job(spark) == jobs, (
+        "orders rewrite rebuilt cosupply_pairs, which never reads orders")
+    for f in edges1 | edges2 | pairs1:
+        shutil.rmtree(os.path.dirname(f.removeprefix("file:")),
+                      ignore_errors=True)
+
+
+def test_gr1_builds_only_the_table_it_reads(spark, sf_dir, tmp_path,
+                                             monkeypatch):
+    """gr1 reads trade_edges alone: against a fresh cache root it builds
+    that table and leaves no cosupply_pairs artifact behind."""
+    from __spark_entry__ import queries
+
+    monkeypatch.setenv("ADW_CACHE_DIR", str(tmp_path / "cache"))
+    queries()["gr1_pagerank_trade_graph"](spark, str(sf_dir)).collect()
+    built = [d for _root, dirs, _files in os.walk(tmp_path / "cache")
+             for d in dirs]
+    assert any(n.startswith("trade_edges-") for n in built), built
+    assert not any("cosupply_pairs" in n for n in built), built
+
+
+def test_each_table_builds_under_its_own_lock(spark, sf_dir, tmp_path,
+                                              monkeypatch):
+    """A crashed builder's incomplete leftover is cleared and rebuilt under
+    the table's lock, and a builder holding one table's lock never blocks
+    a build of the other table."""
+    monkeypatch.setenv("ADW_CACHE_DIR", str(tmp_path / "cache"))
+    path = derived._cache_dir(str(sf_dir), "cosupply_pairs")
+    os.makedirs(path)
+    open(os.path.join(path, "part-crashed.parquet"), "w").close()
+    assert not derived._complete(path)
+
+    edges_lock = derived._cache_dir(str(sf_dir), "trade_edges") + ".lock"
+    with open(edges_lock, "w") as held_lock:
+        fcntl.flock(held_lock, fcntl.LOCK_EX)
+        pairs = derived.trade_graph_tables(spark, str(sf_dir), "cosupply_pairs")
+        assert pairs.count() > 0
+    assert derived._complete(path)
+    assert os.path.isfile(path + ".lock")
+    assert "part-crashed.parquet" not in os.listdir(path)
 
 
 def test_cache_root_is_per_user_and_private(sf_dir):
@@ -121,7 +189,8 @@ def test_cache_root_is_per_user_and_private(sf_dir):
     root = derived._cache_root()
     assert str(os.getuid()) in os.path.basename(root)
     assert (os.stat(root).st_mode & 0o777) == 0o700
-    assert derived._cache_dir(str(sf_dir)).startswith(root + os.sep)
+    for t in ("trade_edges", "cosupply_pairs"):
+        assert derived._cache_dir(str(sf_dir), t).startswith(root + os.sep)
 
 
 def test_cache_root_env_override(monkeypatch, tmp_path):
@@ -131,13 +200,12 @@ def test_cache_root_env_override(monkeypatch, tmp_path):
 
 
 def test_graph_queries_scan_the_rollup(spark, sf_dir):
-    """gr1/tr1/rx1's 100 TB claim: after the one-time build, their plans
-    scan the small materialized edge tables — lineitem never reappears in
+    """gr1/tr1/rx1's 100 TB claim: once a query's table is built, its plan
+    scans the small materialized edge table — lineitem never reappears in
     a per-query plan."""
     from __spark_entry__ import queries
     from agent_data_wrangler_spark.operators.held import held
 
-    derived.trade_graph_tables(spark, str(sf_dir))  # pay the build once
     for name in ("tr1_triangle_count", "rx1_recursive_reachability",
                  "dg1_cosupply_rollup_topk", "dg2_trade_edges_checksum"):
         q = queries()[name]
@@ -162,7 +230,6 @@ def test_dg1_is_topk_heap_over_rollup(spark, sf_dir):
     materialized pair table — no global sort, no join, no lineitem."""
     from agent_data_wrangler_spark.queryset_nstar import QUERIES as Q2
 
-    derived.trade_graph_tables(spark, str(sf_dir))
     plan = Q2["dg1_cosupply_rollup_topk"](spark, str(sf_dir)) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan, plan

@@ -66,3 +66,17 @@ def test_checkpointed_result_outlives_its_scope(spark):
             .executedPlan().toString()
     assert "InMemoryTableScan" in plan
     assert _cache_empty(spark)
+
+
+def test_kept_frames_take_aqe_sized_partitions(spark):
+    """A kept frame is planned like any uncached shuffle: AQE coalesces its
+    output, so a grouped frame of a few KB is not scanned by one task per
+    configured shuffle partition."""
+    from pyspark.sql import functions as F
+
+    configured = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    with held() as h:
+        grouped = h.keep(
+            spark.range(1000).groupBy((F.col("id") % 10).alias("k")).count())
+        assert grouped.count() == 10
+        assert grouped.rdd.getNumPartitions() < configured

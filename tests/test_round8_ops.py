@@ -189,6 +189,56 @@ def test_pagerank_join_strategies_bit_identical(spark):
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
+def test_pagerank_sorted_edges_keep_their_layout(spark, monkeypatch):
+    """Above the broadcast guard the edge frame is kept hash-partitioned and
+    sorted on src so each step's join reads it in place: the iteration join
+    must have no shuffle on the edge side, even though AQE may coalesce
+    the kept frames around it."""
+    from agent_data_wrangler_spark.operators.graph import pagerank
+
+    # A cycle: no dangling node, so the step holds exactly one edge join.
+    edges = spark.createDataFrame(
+        [(i, (i + 1) % 6) for i in range(6)], "src bigint, dst bigint")
+    plans = []
+    checkpoint = type(edges).localCheckpoint
+
+    def spy(self, *args, **kwargs):
+        out = checkpoint(self, *args, **kwargs)
+        plans.append(self._jdf.queryExecution().executedPlan())
+        return out
+
+    monkeypatch.setattr(type(edges), "localCheckpoint", spy)
+    # Ranks too big to broadcast, as broadcast_max_nodes=0 declares: AQE
+    # must not turn the iteration join into a broadcast at runtime either.
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        pagerank(edges, num_iters=1, broadcast_max_nodes=0).collect()
+    finally:
+        spark.conf.set(key, prev)
+
+    def walk(node):
+        # A finished query stage holds its subtree as ``plan``, not as a
+        # child; a cached scan's plan is not walked (its layout is the point).
+        yield node
+        kids = node.children()
+        for i in range(kids.size()):
+            yield from walk(kids.apply(i))
+        if node.nodeName().endswith("QueryStage"):
+            yield from walk(node.plan())
+
+    final = plans[-1].executedPlan()  # the finished adaptive plan
+    joins = [n for n in walk(final) if "Join" in n.nodeName()]
+    assert len(joins) == 1, final.toString()
+    edge_side = joins[0].left()
+    assert "dst" in edge_side.output().toString(), final.toString()
+    shuffles = [n.nodeName() for n in walk(edge_side)
+                if n.nodeName() in ("Exchange", "ShuffleQueryStage",
+                                    "AQEShuffleRead")]
+    assert not shuffles, final.toString()
+
+
 def test_pagerank_error_paths_unpersist_build_frames(spark):
     """r09 ADVICE: the empty-graph and source_nodes validation raises fire
     AFTER build frames are persisted — every such exit must still run the
