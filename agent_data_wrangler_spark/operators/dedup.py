@@ -259,7 +259,6 @@ def near_dup_candidates(
     num_hashes: int = 64,
     bands: int = 16,
     seed: int = 42,
-    signature_strategy: str = "fold",
     shingles_df: DataFrame | None = None,
 ) -> DataFrame:
     """LSH candidate pairs: ``(id_a, id_b)`` with id_a < id_b, distinct.
@@ -282,7 +281,7 @@ def near_dup_candidates(
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(
         df, id_col, text_col, k=k, num_hashes=num_hashes, seed=seed,
-        strategy=signature_strategy, shingles_df=shingles_df,
+        shingles_df=shingles_df,
     ).filter(F.element_at("__sig", 1) < F.lit(_MERSENNE_31))
     # Band keys are sliced off the signature array `bands` times; the array
     # is a named column here (bound once), and the explode fans out a tiny
@@ -979,7 +978,6 @@ def incremental_band_candidates(
     num_hashes: int = 64,
     bands: int = 16,
     seed: int = 42,
-    signature_strategy: str = "fold",
     corpus_shingles: DataFrame | None = None,
     batch_shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -1001,7 +999,7 @@ def incremental_band_candidates(
         # batch x corpus join identically.
         sigs = minhash_signatures(
             df, id_col, text_col, k=k, num_hashes=num_hashes, seed=seed,
-            strategy=signature_strategy, shingles_df=sh,
+            shingles_df=sh,
         ).filter(F.element_at("__sig", 1) < F.lit(_MERSENNE_31))
         keys = F.flatten(
             F.transform(F.array(F.col("__sig")),
@@ -1028,7 +1026,6 @@ def near_dup_pairs_incremental(
     bands: int = 16,
     threshold: float = 0.8,
     seed: int = 42,
-    signature_strategy: str = "fold",
     corpus_shingles: DataFrame | None = None,
     batch_shingles: DataFrame | None = None,
 ) -> DataFrame:
@@ -1053,8 +1050,8 @@ def near_dup_pairs_incremental(
     with held() as h:
         cands = h.keep(incremental_band_candidates(
             corpus, batch, id_col, text_col, k=k, num_hashes=num_hashes,
-            bands=bands, seed=seed, signature_strategy=signature_strategy,
-            corpus_shingles=corpus_shingles, batch_shingles=batch_shingles,
+            bands=bands, seed=seed, corpus_shingles=corpus_shingles,
+            batch_shingles=batch_shingles,
         ))
         cands.count()  # materialize: verify references it several times
         # Verify via the SHARED exact-Jaccard funnel (one copy of the

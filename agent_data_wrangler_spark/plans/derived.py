@@ -1,5 +1,6 @@
-"""Materialized derived tables — the warehouse rollup / materialized-view
-pattern, cached per source identity at a stable path.
+"""Build-once scratch for one session: the materialized trade-graph rollup,
+the staged scratch layouts (:func:`staged`) and the per-call scratch dirs
+(:func:`_scratch_dir`) all live here, and this module owns their lifetime.
 
 The graph queries (gr1 PageRank, tr1 triangle counting, rx1 recursive
 reachability) each used to re-derive their edge list from the raw
@@ -13,9 +14,9 @@ expansion ONCE into small derived edge tables (|customer-supplier pairs| and
 lineitem), materialize them as parquet, and point every graph query at the
 rollup. One pass over the 100 TB fact table amortizes across every
 consumer instead of being paid per query — the same build-once/probe-many
-contract as the per-session scratch layouts (the ANN index lanes n10/n11,
-the export roundtrips, the streaming sources), which all stage through
-:func:`staged` below.
+contract as the other scratch layouts (the ANN index lanes n10/n11, the
+export roundtrips, the streaming sources), and the rollup stages through
+the same :func:`staged`.
 
 Reference parity: the reference agent (`tool_call_agent.py:29-54`) re-runs
 its generated pandas from the raw CSV every invocation — at its ≤500-row
@@ -31,35 +32,22 @@ rebuilds ``trade_edges`` while the pair table stays valid. The price is one
 extra two-column lineitem scan when a session reads both tables, which a
 shared pre-aggregate would have paid once.
 
-Cache location and concurrency contract:
-
-- the artifact root is PER-USER (uid-suffixed, created 0700) under the
-  system temp dir, overridable with ``ADW_CACHE_DIR`` — a shared
-  world-writable path would let another user pre-publish a poisoned
-  artifact that passes the _SUCCESS completeness check;
-- same-host builders of one table serialize on that table's fcntl lock
-  around the check/build/publish critical section, so a complete artifact
-  is NEVER deleted (deletion only happens under the lock, after a fresh
-  incompleteness check) and in-flight readers of a published artifact are
-  safe. Where fcntl is unavailable the fallback is best-effort
-  (re-check-immediately-before-delete + atomic-rename publish), which
-  narrows but does not close the race — single-builder use is the
-  contract there.
+Everything here is scoped to the process that built it, like the
+reference's ``basic_info`` cache that lives in one run's agent state. A
+layout is rebuilt when its sources change, the replaced layout's dir is
+removed, and at exit the process removes every dir it made. Nothing is
+shared across sessions: a deployment that wants a persistent rollup keeps
+it as a catalog table.
 """
 
 from __future__ import annotations
 
-import hashlib
+import atexit
 import os
 import shutil
 import tempfile
 from collections.abc import Callable
 from typing import TypeVar
-
-try:
-    import fcntl
-except ImportError:  # non-POSIX — fall back to best-effort publish
-    fcntl = None  # type: ignore[assignment]
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -123,78 +111,11 @@ _TABLES: dict[str, tuple[tuple[str, ...], str,
 }
 
 
-def _cache_root() -> str:
-    """Per-user artifact root (0700), overridable with ADW_CACHE_DIR.
-
-    The uid suffix + 0700 mode keep the cache out of reach of other local
-    users: nobody else can pre-create an artifact dir (EACCES on our
-    publish rename) or pre-publish a poisoned artifact that would pass the
-    _SUCCESS-only completeness check.
-    """
-    root = os.environ.get("ADW_CACHE_DIR")
-    if not root:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"adw_trade_graph_cache-{os.getuid()}")
-    os.makedirs(root, mode=0o700, exist_ok=True)
-    return root
-
-
-def _cache_dir(sf_dir: str, table: str) -> str:
-    """STABLE location of ``table``'s artifact, keyed by its sources'
-    identity.
-
-    A per-session ``mkdtemp`` would orphan a multi-GB copy of the rollup
-    in /tmp every session; instead the artifact lives at a deterministic
-    path derived from (sf_dir, table, the file-level mtime/size of each
-    source the table's build reads), so (a) later calls and later sessions
-    REUSE a completed build — the correct steady-state for a materialized
-    view — and (b) a changed source gets a new key, never a stale read.
-    Completeness is judged by Spark's own _SUCCESS marker; builds
-    serialize on an fcntl lock and publish with one atomic rename (see
-    module docstring for the exact concurrency contract).
-    """
-    parts = [os.path.abspath(sf_dir), table]
-    for t in _TABLES[table][0]:
-        p = os.path.join(sf_dir, f"{t}.parquet")
-        parts.append(f"{t}:{_path_identity(p)}")
-    key = hashlib.sha1(";".join(parts).encode()).hexdigest()[:16]
-    return os.path.join(_cache_root(), f"{table}-{key}")
-
-
-def _complete(path: str) -> bool:
-    return os.path.isfile(os.path.join(path, "_SUCCESS"))
-
-
 def _build_trade_graph(
     spark: SparkSession, sf_dir: str, table: str, path: str
 ) -> None:
-    """Build ``table`` into a staging dir and atomically publish it at
-    ``path``.
-
-    Caller holds the table's build lock (when fcntl is available), so a
-    leftover incomplete ``path`` here is always a crashed builder's — safe
-    to clear. A COMPLETE artifact is never deleted on any path.
-    """
-    if _complete(path):  # published while we waited for the lock
-        return
-    if os.path.isdir(path):
-        # Incomplete leftover from a crashed builder blocks the publish
-        # rename — clear it. (Re-checked complete immediately above; under
-        # the lock no other builder can publish between the check and
-        # this delete.)
-        shutil.rmtree(path, ignore_errors=True)
-    stage = f"{path}.stage-{os.getpid()}"
-    shutil.rmtree(stage, ignore_errors=True)
-    _TABLES[table][2](spark, sf_dir).write.parquet(stage)
-    try:
-        os.rename(stage, path)
-    except OSError:
-        # Another builder published first (possible only on the no-fcntl
-        # fallback path); theirs is complete — use it.
-        shutil.rmtree(stage, ignore_errors=True)
-        if not _complete(path):
-            raise
+    """Write ``table`` to ``path``."""
+    _TABLES[table][2](spark, sf_dir).write.parquet(path)
 
 
 def trade_graph_tables(
@@ -217,23 +138,21 @@ def trade_graph_tables(
     C(suppliers_per_order, 2) per order — bounded by the max basket (TPC-H
     ~7 lines), linear in orders, never |suppliers|².
 
-    Materialized once per SOURCE IDENTITY (see :func:`_cache_dir`): later
-    calls and later sessions read the completed parquet artifact, while a
-    regenerated source — even into the same directory mid-session —
-    triggers a rebuild, never a stale read.
+    Staged once per source identity (:func:`staged`): later calls in this
+    process read the parquet artifact, while a regenerated source — even
+    into the same directory mid-session — triggers a rebuild, never a
+    stale read. The memo holds the artifact's path, not a frame, so a
+    session made after ``spark.stop()`` still reads it.
     """
-    path = _cache_dir(sf_dir, table)
-    if not _complete(path):
-        if fcntl is not None:
-            # Serialize same-host builders: the lock makes the
-            # check/clear/build/publish sequence atomic, so a complete
-            # artifact can never be deleted out from under a reader.
-            with open(f"{path}.lock", "w") as lf:
-                fcntl.flock(lf, fcntl.LOCK_EX)
-                _build_trade_graph(spark, sf_dir, table, path)
-        else:
-            _build_trade_graph(spark, sf_dir, table, path)
-    return spark.read.schema(_TABLES[table][1]).parquet(path)
+    sources, schema, _ = _TABLES[table]
+
+    def build(base: str) -> str:
+        path = os.path.join(base, table)
+        _build_trade_graph(spark, sf_dir, table, path)
+        return path
+
+    path = staged(sf_dir, sources, ("trade_graph", table), build)
+    return spark.read.schema(schema).parquet(path)
 
 
 # (kind, abspath(sf_dir)) → (source identity, scratch dir, built value):
@@ -243,16 +162,39 @@ _STAGED: dict[tuple[tuple, str], tuple[str, str, object]] = {}
 T = TypeVar("T")
 
 
-def _scratch_dir(prefix: str) -> str:
-    """Scratch space for streaming checkpoints/staging: tmpfs when available.
+# scratch dir → the pid that made it: a process removes only its own dirs
+# at exit, so a forked child never deletes its parent's scratch.
+_SCRATCH: dict[str, int] = {}
 
-    Local state-store commits fsync per micro-batch; on a disk-backed /tmp
-    that IO dominates the small-SF streaming bench (each query pays ~1s of
-    pure checkpoint latency). /dev/shm removes it. On a real cluster the
-    checkpoint goes to HDFS/S3 and this helper is irrelevant — it only
-    shapes the local harness."""
-    base = "/dev/shm" if os.access("/dev/shm", os.W_OK) else None
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
+
+def _scratch_dir(prefix: str, *, tmpfs: bool) -> str:
+    """A fresh ``<prefix>*`` dir, removed when this process exits; the one
+    place the engine makes a temp dir.
+
+    ``tmpfs`` puts it under /dev/shm when that is writable. Local
+    state-store commits fsync per micro-batch; on a disk-backed /tmp that
+    IO dominates the small-SF streaming bench (each query pays ~1s of pure
+    checkpoint latency). On a real cluster the checkpoint goes to HDFS/S3
+    and the choice is irrelevant — it only shapes the local harness."""
+    base = ("/dev/shm" if tmpfs and os.access("/dev/shm", os.W_OK)
+            else None)
+    path = tempfile.mkdtemp(prefix=prefix, dir=base)
+    _SCRATCH[path] = os.getpid()
+    return path
+
+
+def _drop_scratch(path: str) -> None:
+    """Remove a dir :func:`_scratch_dir` made, before exit."""
+    shutil.rmtree(path, ignore_errors=True)
+    _SCRATCH.pop(path, None)
+
+
+@atexit.register
+def _drop_own_scratch() -> None:
+    pid = os.getpid()
+    for path, owner in list(_SCRATCH.items()):
+        if owner == pid:
+            _drop_scratch(path)
 
 
 def staged(sf_dir: str, tables: tuple[str, ...], kind: tuple,
@@ -265,16 +207,25 @@ def staged(sf_dir: str, tables: tuple[str, ...], kind: tuple,
     "events.xml", True)``). The value is reused only while each
     ``{sf_dir}/{t}.parquet`` in ``tables`` keeps its file identity and the
     dir still exists; otherwise ``build`` runs on a fresh ``adw_<name>_``
-    dir (under /dev/shm when ``tmpfs``) and replaces the entry.
+    dir (under /dev/shm when ``tmpfs``) and replaces the entry. The
+    replaced entry's dir is removed, so a frame still reading it fails
+    instead of reading data from before the source rewrite; a build that
+    raises leaves no dir behind.
     """
     key = (kind, os.path.abspath(sf_dir))
     ident = ";".join(
         _path_identity(os.path.join(sf_dir, f"{t}.parquet")) for t in tables)
     hit = _STAGED.get(key)
-    if hit is not None and hit[0] == ident and os.path.isdir(hit[1]):
-        return hit[2]
-    prefix = f"adw_{kind[0]}_"
-    base = _scratch_dir(prefix) if tmpfs else tempfile.mkdtemp(prefix=prefix)
-    value = build(base)
+    if hit is not None:
+        if hit[0] == ident and os.path.isdir(hit[1]):
+            return hit[2]
+        del _STAGED[key]
+        _drop_scratch(hit[1])
+    base = _scratch_dir(f"adw_{kind[0]}_", tmpfs=tmpfs)
+    try:
+        value = build(base)
+    except BaseException:
+        _drop_scratch(base)
+        raise
     _STAGED[key] = (ident, base, value)
     return value

@@ -36,7 +36,7 @@ from agent_data_wrangler_spark.operators import (
     windows,
 )
 from agent_data_wrangler_spark.operators.held import Held, checkpointed
-from agent_data_wrangler_spark.plans.derived import staged
+from agent_data_wrangler_spark.plans.derived import _scratch_dir, staged
 from agent_data_wrangler_spark.sources.readers import read_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1627,7 +1627,6 @@ def pl1_pipeline_spec_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pl2_pipeline_event_log_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
@@ -1635,7 +1634,7 @@ def pl2_pipeline_event_log_events(spark: SparkSession, sf_dir: str) -> DataFrame
     from agent_data_wrangler_spark.sources.readers import read_jsonl
 
     log_path = os.path.join(
-        tempfile.mkdtemp(prefix="adw_pl2_"), "pipeline_events.jsonl")
+        _scratch_dir("adw_pl2_", tmpfs=False), "pipeline_events.jsonl")
     ev = read_table(spark, sf_dir, "events").select("event_type", "value")
     pipe = Pipeline.from_spec(
         "pl2_clean_events", _PL1_SPEC, count_rows=True, log_path=log_path)
@@ -1824,13 +1823,12 @@ def csv1_roundtrip_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def cm1_compaction_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from agent_data_wrangler_spark.sources.writers import compact
 
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value")
-    frag = os.path.join(tempfile.mkdtemp(prefix="adw_cm1_"), "events_frag")
+    frag = os.path.join(_scratch_dir("adw_cm1_", tmpfs=False), "events_frag")
     ev.repartition(64).write.parquet(frag)
 
     def n_data_files(p: str) -> int:
@@ -1892,7 +1890,6 @@ def cm1_compaction_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bin1_binaryfile_ingest_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from agent_data_wrangler_spark.sources.readers import read_binary_files
 
@@ -1902,7 +1899,7 @@ def bin1_binaryfile_ingest_documents(spark: SparkSession, sf_dir: str) -> DataFr
         .select("doc_id", "text")
         .collect()  # bounded: 50 rows, staging fixture only
     )
-    stage = tempfile.mkdtemp(prefix="adw_bin1_")
+    stage = _scratch_dir("adw_bin1_", tmpfs=False)
     for r in docs:
         with open(os.path.join(stage, f"doc_{r['doc_id']:05d}.txt"),
                   "wb") as fh:
@@ -1944,13 +1941,12 @@ def bin1_binaryfile_ingest_documents(spark: SparkSession, sf_dir: str) -> DataFr
 )
 def zo1_zorder_layout_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
-    import tempfile
 
     from agent_data_wrangler_spark.sources.writers import write_zorder
 
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value")
-    out = os.path.join(tempfile.mkdtemp(prefix="adw_zo1_"), "events_z")
+    out = os.path.join(_scratch_dir("adw_zo1_", tmpfs=False), "events_z")
     write_zorder(ev, out, ["user_id", "value"], num_files=8)
     back = spark.read.parquet(out)
 
@@ -2104,12 +2100,10 @@ def _bucketed_orders_customer(spark: SparkSession, sf_dir: str) -> tuple[str, st
     cached = _BUCKETED_TABLES.get(sf_dir)
     if cached is not None and all(spark.catalog.tableExists(t) for t in cached):
         return cached
-    import tempfile
-
     from agent_data_wrangler_spark.sources.writers import write_bucketed
 
     _BK_SEQ += 1
-    base = tempfile.mkdtemp(prefix="adw_bucketed_")
+    base = _scratch_dir("adw_bucketed_", tmpfs=False)
     o_t = f"adw_bk_orders_{_BK_SEQ}"
     c_t = f"adw_bk_customer_{_BK_SEQ}"
     write_bucketed(
@@ -4201,33 +4195,28 @@ def wa1_weekly_active_users_events(
 # with Spark's own double→string shortest-roundtrip cast, so good-row
 # values survive the text round-trip bit-for-bit (the csv1 guarantee).
 # ---------------------------------------------------------------------------
-_CQ1_STAGED: dict[str, str] = {}
-
-
 def staged_dirty_csv(spark: SparkSession, sf_dir: str) -> str:
-    """Stage (once per sf_dir) the events CSV with planted corruption on
-    event_id % 97 — shared by the batch quarantine (cq1) and its
-    streaming twin (st8)."""
+    """Stage (once per events version) the events CSV with planted
+    corruption on event_id % 97 — shared by the batch quarantine (cq1) and
+    its streaming twin (st8)."""
     import os
-    import tempfile
 
-    staged = _CQ1_STAGED.get(sf_dir)
-    if staged is not None and os.path.isdir(staged):
-        return staged
-    ev = read_table(spark, sf_dir, "events")
-    line = F.concat(
-        F.col("event_id").cast("string"),
-        F.lit(","),
-        F.col("event_type"),
-        F.lit(","),
-        F.when(F.col("event_id") % 97 == 0, F.lit("###")).otherwise(
-            F.coalesce(F.col("value").cast("string"), F.lit(""))
-        ),
-    )
-    staged = os.path.join(tempfile.mkdtemp(prefix="adw_cq1_"), "dirty_csv")
-    ev.select(line.alias("value")).write.text(staged)
-    _CQ1_STAGED[sf_dir] = staged
-    return staged
+    def build(base: str) -> str:
+        ev = read_table(spark, sf_dir, "events")
+        line = F.concat(
+            F.col("event_id").cast("string"),
+            F.lit(","),
+            F.col("event_type"),
+            F.lit(","),
+            F.when(F.col("event_id") % 97 == 0, F.lit("###")).otherwise(
+                F.coalesce(F.col("value").cast("string"), F.lit(""))
+            ),
+        )
+        path = os.path.join(base, "dirty_csv")
+        ev.select(line.alias("value")).write.text(path)
+        return path
+
+    return staged(sf_dir, ("events",), ("cq1",), build)
 
 
 @query(

@@ -39,7 +39,11 @@ from agent_data_wrangler_spark.functions.text import (
 )
 from agent_data_wrangler_spark.operators import dedup, similarity
 from agent_data_wrangler_spark.operators.held import Held, checkpointed, held
-from agent_data_wrangler_spark.plans.derived import _scratch_dir, staged
+from agent_data_wrangler_spark.plans.derived import (
+    _drop_scratch,
+    _scratch_dir,
+    staged,
+)
 from agent_data_wrangler_spark.sources.readers import read_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -125,7 +129,7 @@ def _drain_to_table(
     from agent_data_wrangler_spark.streaming import run_available_now
 
     name = f"{prefix}_{next(_STREAM_SEQ)}"
-    ckpt = _scratch_dir(f"adw_ckpt_{prefix}_")
+    ckpt = _scratch_dir(f"adw_ckpt_{prefix}_", tmpfs=True)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nodata = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
     spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
@@ -136,6 +140,9 @@ def _drain_to_table(
     try:
         run_available_now(stream_df, name, ckpt)
     finally:
+        # The memory table holds the result; nothing reads the checkpoint
+        # once the drain has returned.
+        _drop_scratch(ckpt)
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata)
     return spark.table(name)
@@ -1322,7 +1329,7 @@ def st5_incremental_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.round(F.sum("value"), 2).alias("sum_value"),
     )
-    rollup_dir = os.path.join(_scratch_dir("adw_rollup_"), "daily")
+    rollup_dir = os.path.join(_scratch_dir("adw_rollup_", tmpfs=True), "daily")
 
     def upsert(batch_df: DataFrame, batch_id: int) -> None:
         # Complete mode hands the full current state each batch; the rollup
@@ -1332,7 +1339,7 @@ def st5_incremental_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame
             F.col("w").getField("start").alias("day"), "event_type", "n", "sum_value"
         ).write.mode("overwrite").parquet(rollup_dir)
 
-    ckpt = _scratch_dir("adw_ckpt_st5_")
+    ckpt = _scratch_dir("adw_ckpt_st5_", tmpfs=True)
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     prev_nodata = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
@@ -1340,6 +1347,8 @@ def st5_incremental_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame
     try:
         run_foreach_batch(agg, upsert, ckpt, output_mode="complete")
     finally:
+        # The returned frame reads rollup_dir, never the checkpoint.
+        _drop_scratch(ckpt)
         spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata)
     return spark.read.parquet(rollup_dir)
@@ -3407,14 +3416,11 @@ def ns1_negative_samples_documents(spark: SparkSession, sf_dir: str) -> DataFram
 # — then read back manifest-driven and aggregated. The oracle recomputes
 # from the ORIGINAL parquet, so a dropped task file, a leaked uncommitted
 # attempt, or JSON type drift breaks the hash. Values ride as integer
-# cents (JSON-native, no float repr dependence); the staged dir is cached
-# per sf_dir like the csv1/or1 round-trips.
+# cents (JSON-native, no float repr dependence); the dir is staged once per
+# events version like the csv1/or1 round-trips.
 # Scale: tasks write independently, the driver sees |tasks| commit
 # messages and one manifest rename; reads parallelize per committed file.
 # ---------------------------------------------------------------------------
-_PD2_STAGED: dict[str, str] = {}
-
-
 @query(
     "pd2_python_datasink_roundtrip",
     oracle="""
@@ -3424,16 +3430,13 @@ _PD2_STAGED: dict[str, str] = {}
     """,
 )
 def pd2_python_datasink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from agent_data_wrangler_spark.sources.python_datasource import (
         register_jsonl_manifest,
     )
 
     register_jsonl_manifest(spark)
-    out = _PD2_STAGED.get(sf_dir)
-    if out is None or not os.path.isdir(out):
-        out = tempfile.mkdtemp(prefix="adw_pd2_")
+
+    def build(out: str) -> str:
         ev = read_table(spark, sf_dir, "events").select(
             "event_id",
             "event_type",
@@ -3446,7 +3449,9 @@ def pd2_python_datasink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame
             .mode("overwrite")
             .save()
         )
-        _PD2_STAGED[sf_dir] = out
+        return out
+
+    out = staged(sf_dir, ("events",), ("pd2",), build)
     back = spark.read.format("jsonl_manifest").option("path", out).load()
     return back.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n"),
@@ -5359,7 +5364,8 @@ def ix1_index_freshness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # keep the sidecar claiming it exists — the "lost partition directory"
     # failure mode. The audit must flag BOTH legs: source coverage
     # (n_missing > 0) and sidecar integrity (stats_ok False).
-    tampered_dir = os.path.join(_scratch_dir("adw_ix1_"), "tampered")
+    scratch = _scratch_dir("adw_ix1_", tmpfs=True)
+    tampered_dir = os.path.join(scratch, "tampered")
 
     def _link_or_copy(src: str, dst: str, *, follow_symlinks: bool = True) -> str:
         # r13-opt: ix2's ADVICE fix applied here too — hard links cost zero
@@ -5395,7 +5401,7 @@ def ix1_index_freshness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, tampered_dir, e, id_col="vec_id"
         )
     finally:
-        shutil.rmtree(tampered_dir, ignore_errors=True)
+        _drop_scratch(scratch)
     return spark.range(1).select(
         F.lit(healthy["n_source"]).cast("bigint").alias("n_source"),
         F.lit(healthy["n_indexed"]).cast("bigint").alias("n_indexed"),
@@ -6637,7 +6643,8 @@ def ix2_lsh_freshness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = read_table(spark, sf_dir, "embeddings")
     path, _, _ = _staged_lsh(spark, sf_dir)
     healthy = similarity.audit_lsh_layout(spark, path, e, id_col="vec_id")
-    tampered_dir = os.path.join(_scratch_dir("adw_ix2_"), "tampered")
+    scratch = _scratch_dir("adw_ix2_", tmpfs=True)
+    tampered_dir = os.path.join(scratch, "tampered")
 
     def _link_or_copy(src: str, dst: str, *, follow_symlinks: bool = True) -> str:
         # Hard links cost zero extra tmpfs space (the scratch dir prefers
@@ -6661,7 +6668,7 @@ def ix2_lsh_freshness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, tampered_dir, e, id_col="vec_id"
         )
     finally:
-        shutil.rmtree(tampered_dir, ignore_errors=True)
+        _drop_scratch(scratch)
     return spark.range(1).select(
         F.lit(healthy["n_source"]).cast("bigint").alias("n_source"),
         F.lit(healthy["n_indexed"]).cast("bigint").alias("n_indexed"),

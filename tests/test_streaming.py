@@ -314,3 +314,26 @@ def test_tws_lane_detection_gated(spark, sf_dir):
             os.path.join(sf_dir, "events.parquet")))
     want = con.execute(queryset_nstar.ORACLE["st10_tws_user_totals"]).fetchall()
     assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want]
+
+
+def test_drain_removes_its_checkpoint(spark, sf_dir, monkeypatch):
+    """The drain's memory table holds the result, so an st1 call leaves no
+    checkpoint dir behind once it returns."""
+    import os
+
+    from agent_data_wrangler_spark import queryset_nstar
+
+    made = []
+    real = queryset_nstar._scratch_dir
+
+    def spy(prefix, *, tmpfs):
+        made.append(real(prefix, tmpfs=tmpfs))
+        return made[-1]
+
+    monkeypatch.setattr(queryset_nstar, "_scratch_dir", spy)
+    rows = queryset_nstar.QUERIES["st1_streaming_window_counts"](
+        spark, str(sf_dir)).collect()
+    ckpts = [d for d in made if os.path.basename(d).startswith("adw_ckpt_")]
+    assert rows and ckpts, made
+    for d in ckpts:
+        assert not os.path.exists(d), f"checkpoint left behind: {d}"
