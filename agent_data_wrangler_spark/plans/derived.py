@@ -1,6 +1,12 @@
-"""Build-once scratch for one session: the materialized trade-graph rollup,
-the staged scratch layouts (:func:`staged`) and the per-call scratch dirs
-(:func:`_scratch_dir`) all live here, and this module owns their lifetime.
+"""The engine's scratch dirs and their two lifetimes; no other module makes
+or removes one.
+
+- Source version (:func:`staged`): an output that depends only on its
+  source tables (the trade-graph rollup below, every staged copy or layout,
+  pl2's log, st5's rollup) is built once per source identity; a rewrite
+  rebuilds it and removes the superseded dir.
+- Call (:func:`scratch`): a dir that one call alone reads (a stream
+  checkpoint, a tamper copy) lives for one ``with`` block.
 
 The graph queries (gr1 PageRank, tr1 triangle counting, rx1 recursive
 reachability) each used to re-derive their edge list from the raw
@@ -13,10 +19,7 @@ expansion ONCE into small derived edge tables (|customer-supplier pairs| and
 |supplier co-occurrence pairs| are orders of magnitude smaller than
 lineitem), materialize them as parquet, and point every graph query at the
 rollup. One pass over the 100 TB fact table amortizes across every
-consumer instead of being paid per query — the same build-once/probe-many
-contract as the other scratch layouts (the ANN index lanes n10/n11, the
-export roundtrips, the streaming sources), and the rollup stages through
-the same :func:`staged`.
+consumer instead of being paid per query.
 
 Reference parity: the reference agent (`tool_call_agent.py:29-54`) re-runs
 its generated pandas from the raw CSV every invocation — at its ≤500-row
@@ -33,11 +36,10 @@ extra two-column lineitem scan when a session reads both tables, which a
 shared pre-aggregate would have paid once.
 
 Everything here is scoped to the process that built it, like the
-reference's ``basic_info`` cache that lives in one run's agent state. A
-layout is rebuilt when its sources change, the replaced layout's dir is
-removed, and at exit the process removes every dir it made. Nothing is
-shared across sessions: a deployment that wants a persistent rollup keeps
-it as a catalog table.
+reference's ``basic_info`` cache that lives in one run's agent state, and
+at exit the process removes every dir it made. Nothing is shared across
+processes: a deployment that wants a persistent rollup keeps it as a
+catalog table.
 """
 
 from __future__ import annotations
@@ -46,7 +48,8 @@ import atexit
 import os
 import shutil
 import tempfile
-from collections.abc import Callable
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -168,8 +171,8 @@ _SCRATCH: dict[str, int] = {}
 
 
 def _scratch_dir(prefix: str, *, tmpfs: bool) -> str:
-    """A fresh ``<prefix>*`` dir, removed when this process exits; the one
-    place the engine makes a temp dir.
+    """A fresh ``<prefix>*`` dir, removed when this process exits at the
+    latest; the one place the engine makes a temp dir.
 
     ``tmpfs`` puts it under /dev/shm when that is writable. Local
     state-store commits fsync per micro-batch; on a disk-backed /tmp that
@@ -187,6 +190,17 @@ def _drop_scratch(path: str) -> None:
     """Remove a dir :func:`_scratch_dir` made, before exit."""
     shutil.rmtree(path, ignore_errors=True)
     _SCRATCH.pop(path, None)
+
+
+@contextmanager
+def scratch(prefix: str, *, tmpfs: bool) -> Iterator[str]:
+    """A fresh ``<prefix>*`` dir for one call's own writes, removed when the
+    block exits however it exits (see :func:`_scratch_dir` for ``tmpfs``)."""
+    path = _scratch_dir(prefix, tmpfs=tmpfs)
+    try:
+        yield path
+    finally:
+        _drop_scratch(path)
 
 
 @atexit.register

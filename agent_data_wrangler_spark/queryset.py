@@ -36,7 +36,7 @@ from agent_data_wrangler_spark.operators import (
     windows,
 )
 from agent_data_wrangler_spark.operators.held import Held, checkpointed
-from agent_data_wrangler_spark.plans.derived import _scratch_dir, staged
+from agent_data_wrangler_spark.plans.derived import staged
 from agent_data_wrangler_spark.sources.readers import read_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1633,15 +1633,17 @@ def pl2_pipeline_event_log_events(spark: SparkSession, sf_dir: str) -> DataFrame
     from agent_data_wrangler_spark.plans.pipeline import Pipeline
     from agent_data_wrangler_spark.sources.readers import read_jsonl
 
-    log_path = os.path.join(
-        _scratch_dir("adw_pl2_", tmpfs=False), "pipeline_events.jsonl")
-    ev = read_table(spark, sf_dir, "events").select("event_type", "value")
-    pipe = Pipeline.from_spec(
-        "pl2_clean_events", _PL1_SPEC, count_rows=True, log_path=log_path)
-    pipe.run(ev)
-    # The replay reads the four traced fields under their declared types:
-    # schema inference would be a Spark job on every call, because each
-    # call writes a fresh log.
+    def build(base: str) -> str:
+        log_path = os.path.join(base, "pipeline_events.jsonl")
+        ev = read_table(spark, sf_dir, "events").select("event_type", "value")
+        Pipeline.from_spec(
+            "pl2_clean_events", _PL1_SPEC, count_rows=True, log_path=log_path,
+        ).run(ev)
+        return log_path
+
+    # The log is written once per events version; the replay reads the four
+    # traced fields under their declared types, so it fires no inference job.
+    log_path = staged(sf_dir, ("events",), ("pl2",), build)
     return read_jsonl(spark, log_path, schema=StructType([
         StructField("event", StringType()),
         StructField("stage", StringType()),
@@ -1828,31 +1830,35 @@ def cm1_compaction_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "event_type", "value")
-    frag = os.path.join(_scratch_dir("adw_cm1_", tmpfs=False), "events_frag")
-    ev.repartition(64).write.parquet(frag)
 
     def n_data_files(p: str) -> int:
         return sum(1 for f in os.listdir(p)
                    if not f.startswith(("_", ".")))
 
-    before = n_data_files(frag)
-    # compact(target_mb=128) writes ceil(OUTPUT_bytes/128MB) files, so the
-    # verdict's upper bound must be derived from the measured input size —
-    # a hard-coded constant would flip false at scale factors where the
-    # projection exceeds 1 GB even though compaction worked (the floor of
-    # 8 keeps slack at tiny SFs where one file is expected). The 1.5×
-    # headroom covers re-encoding growth: merged files can exceed the
-    # fragmented input's bytes (bigger row groups change dictionary/RLE
-    # wins, compression ratios shift), and a bound keyed to INPUT bytes
-    # alone would flip false at large SF even though compaction worked
-    # (r09 ADVICE).
-    frag_bytes = sum(
-        os.path.getsize(os.path.join(frag, f))
-        for f in os.listdir(frag) if not f.startswith(("_", ".")))
-    bound = max(8, -(-(3 * frag_bytes) // (2 * 128 * 1024 * 1024)))
-    out = compact(spark, frag, target_mb=128)
-    after = n_data_files(out)
-    back = spark.read.parquet(out)
+    def build(base: str) -> tuple[str, int, int, int]:
+        frag = os.path.join(base, "events_frag")
+        ev.repartition(64).write.parquet(frag)
+        before = n_data_files(frag)
+        # compact(target_mb=128) writes ceil(OUTPUT_bytes/128MB) files, so
+        # the verdict's upper bound must be derived from the measured input
+        # size — a hard-coded constant would flip false at scale factors
+        # where the projection exceeds 1 GB even though compaction worked
+        # (the floor of 8 keeps slack at tiny SFs where one file is
+        # expected). The 1.5× headroom covers re-encoding growth: merged
+        # files can exceed the fragmented input's bytes (bigger row groups
+        # change dictionary/RLE wins, compression ratios shift), and a
+        # bound keyed to INPUT bytes alone would flip false at large SF
+        # even though compaction worked (r09 ADVICE).
+        frag_bytes = sum(
+            os.path.getsize(os.path.join(frag, f))
+            for f in os.listdir(frag) if not f.startswith(("_", ".")))
+        bound = max(8, -(-(3 * frag_bytes) // (2 * 128 * 1024 * 1024)))
+        out = compact(spark, frag, target_mb=128)
+        return out, before, n_data_files(out), bound
+
+    out, before, after, bound = staged(sf_dir, ("events",), ("cm1",), build)
+    # ev's schema: no footer-inference job, so a repeat call fires none.
+    back = spark.read.schema(ev.schema).parquet(out)
     return back.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_rows"),
         F.sum(F.round(F.col("value") * 100).cast("bigint"))
@@ -1893,17 +1899,20 @@ def bin1_binaryfile_ingest_documents(spark: SparkSession, sf_dir: str) -> DataFr
 
     from agent_data_wrangler_spark.sources.readers import read_binary_files
 
-    docs = (
-        read_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 50)
-        .select("doc_id", "text")
-        .collect()  # bounded: 50 rows, staging fixture only
-    )
-    stage = _scratch_dir("adw_bin1_", tmpfs=False)
-    for r in docs:
-        with open(os.path.join(stage, f"doc_{r['doc_id']:05d}.txt"),
-                  "wb") as fh:
-            fh.write((r["text"] or "").encode("utf-8"))
+    def build(base: str) -> str:
+        docs = (
+            read_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 50)
+            .select("doc_id", "text")
+            .collect()  # bounded: 50 rows, staging fixture only
+        )
+        for r in docs:
+            with open(os.path.join(base, f"doc_{r['doc_id']:05d}.txt"),
+                      "wb") as fh:
+                fh.write((r["text"] or "").encode("utf-8"))
+        return base
+
+    stage = staged(sf_dir, ("documents",), ("bin1",), build)
     files = read_binary_files(spark, stage, glob="*.txt")
     return files.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_files"),
@@ -1946,9 +1955,15 @@ def zo1_zorder_layout_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ev = read_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "value")
-    out = os.path.join(_scratch_dir("adw_zo1_", tmpfs=False), "events_z")
-    write_zorder(ev, out, ["user_id", "value"], num_files=8)
-    back = spark.read.parquet(out)
+
+    def build(base: str) -> str:
+        out = os.path.join(base, "events_z")
+        write_zorder(ev, out, ["user_id", "value"], num_files=8)
+        return out
+
+    # ev's schema: no footer-inference job, so a repeat call fires none.
+    back = spark.read.schema(ev.schema).parquet(
+        staged(sf_dir, ("events",), ("zo1",), build))
 
     per_file = back.groupBy(F.input_file_name().alias("f")).agg(
         F.min("user_id").alias("lo"), F.max("user_id").alias("hi"))
@@ -2081,43 +2096,51 @@ def sn1_sessionize_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # BK1 — bucketed co-located join (S2-scale variant): orders and customer are
-# staged ONCE per sf_dir as bucketed external tables hashed on their join
-# keys; the join then reads bucket files as pre-shuffled partitions and runs
-# with ZERO Exchange (plan-tested with broadcast disabled). The 100 TB
+# staged ONCE per source version as bucketed external tables hashed on their
+# join keys; the join then reads bucket files as pre-shuffled partitions and
+# runs with ZERO Exchange (plan-tested with broadcast disabled). The 100 TB
 # pattern: pay the bucketing shuffle once at ingest, amortize it over every
 # downstream join/agg on the key. Oracle: the plain equi-join on the original
 # parquet — bucketing must be invisible to results.
 # ---------------------------------------------------------------------------
-_BUCKETED_TABLES: dict[str, tuple[str, str]] = {}
-_BK_SEQ = 0
+_BK1_TABLES = (("orders", "o_custkey", "o_totalprice"),
+               ("customer", "c_custkey", "c_mktsegment"))
 
 
-def _bucketed_orders_customer(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Stage bucketed twins of orders/customer for ``sf_dir``, cached per
-    (process, sf_dir); names are sequence-unique so a fresh SparkSession in
-    the same process never collides with a stale external-table directory."""
-    global _BK_SEQ
-    cached = _BUCKETED_TABLES.get(sf_dir)
-    if cached is not None and all(spark.catalog.tableExists(t) for t in cached):
-        return cached
+def _bucketed_orders_customer(spark: SparkSession, sf_dir: str) -> list[str]:
+    """Bucketed twins of orders/customer for ``sf_dir``, as catalog tables.
+
+    The files stage through :func:`derived.staged`, so an in-place rewrite
+    of either source rebuilds them. The table names are fixed per
+    ``sf_dir``: a rebuild drops the old pair and writes the new one, and
+    every call registers the pair with ``CREATE TABLE IF NOT EXISTS`` over
+    the staged files (explicit columns, no job), so a session whose catalog
+    lost the tables still reads them."""
+    import hashlib
+    import os
+
     from agent_data_wrangler_spark.sources.writers import write_bucketed
 
-    _BK_SEQ += 1
-    base = _scratch_dir("adw_bucketed_", tmpfs=False)
-    o_t = f"adw_bk_orders_{_BK_SEQ}"
-    c_t = f"adw_bk_customer_{_BK_SEQ}"
-    write_bucketed(
-        read_table(spark, sf_dir, "orders").select("o_custkey", "o_totalprice"),
-        o_t, ["o_custkey"], num_buckets=8, sort_cols=["o_custkey"],
-        path=f"{base}/orders",
-    )
-    write_bucketed(
-        read_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
-        c_t, ["c_custkey"], num_buckets=8, sort_cols=["c_custkey"],
-        path=f"{base}/customer",
-    )
-    _BUCKETED_TABLES[sf_dir] = (o_t, c_t)
-    return o_t, c_t
+    tag = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+    names = [f"adw_bk_{t}_{tag}" for t, _, _ in _BK1_TABLES]
+
+    def build(base: str) -> list[str]:
+        ddl = []
+        for name, (t, key, val) in zip(names, _BK1_TABLES):
+            df = read_table(spark, sf_dir, t).select(key, val)
+            path = os.path.join(base, t)
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            write_bucketed(df, name, [key], num_buckets=8, sort_cols=[key],
+                           path=path)
+            ddl.append(
+                f"CREATE TABLE IF NOT EXISTS {name} ({df.schema.toDDL()}) "
+                f"USING parquet CLUSTERED BY ({key}) SORTED BY ({key}) "
+                f"INTO 8 BUCKETS LOCATION '{path}'")
+        return ddl
+
+    for stmt in staged(sf_dir, ("orders", "customer"), ("bucketed",), build):
+        spark.sql(stmt)
+    return names
 
 
 @query(

@@ -11,8 +11,10 @@ booleans next to hard values DuckDB recomputes from scratch; raw-path
 semantics stay pinned by planted-near-dup unit tests
 (tests/test_dedup_similarity.py). __spark_entry__.queries() merges this
 registry after queryset.py's, both in registration order. Scratch layouts
-shared across calls (streaming sources, ANN/IVF serving layouts) stage
-through plans.derived.staged.
+shared across calls (streaming sources, st5's rollup, ANN/IVF serving
+layouts) stage through plans.derived.staged; a dir one call alone reads
+(a drain checkpoint, ix1/ix2's tamper copy) lives in a plans.derived.scratch
+block.
 
 Scale notes inline per query — the grading bar is "would this plan survive
 100 TB", not "does it pass at sf0.01".
@@ -23,7 +25,9 @@ from __future__ import annotations
 import itertools
 import math
 import os
-from collections.abc import Callable
+import shutil
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,11 +43,7 @@ from agent_data_wrangler_spark.functions.text import (
 )
 from agent_data_wrangler_spark.operators import dedup, similarity
 from agent_data_wrangler_spark.operators.held import Held, checkpointed, held
-from agent_data_wrangler_spark.plans.derived import (
-    _drop_scratch,
-    _scratch_dir,
-    staged,
-)
+from agent_data_wrangler_spark.plans.derived import scratch, staged
 from agent_data_wrangler_spark.sources.readers import read_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -100,12 +100,27 @@ def _staged_events(spark: SparkSession, sf_dir: str) -> tuple[str, StructType]:
     return staged(sf_dir, ("events",), ("stream",), build, tmpfs=True)
 
 
-def _drain_to_table(
-    spark: SparkSession, stream_df: DataFrame, prefix: str, *, partitions: int = 4,
-    no_data_batch: bool = False,
+def _event_stream(
+    spark: SparkSession, sf_dir: str, *, max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """AvailableNow-drain a streaming frame into a uniquely-named memory table
-    (fresh checkpoint per call so replays within one session re-process).
+    """The staged events copy as a file stream."""
+    from agent_data_wrangler_spark.streaming import stream_from_directory
+
+    path, schema = _staged_events(spark, sf_dir)
+    return stream_from_directory(
+        spark, path, schema, max_files_per_trigger=max_files_per_trigger)
+
+
+@contextmanager
+def _drain_scope(
+    spark: SparkSession, prefix: str, *, partitions: int = 4,
+    no_data_batch: bool = False,
+) -> Iterator[str]:
+    """A call-scoped checkpoint dir for one AvailableNow drain, with the
+    drain's session settings pinned; both are undone when the block exits.
+    Nothing reads a checkpoint once its drain has returned: the drain's
+    output (a memory table, st5's rollup files) holds the result, and the
+    next call drains from a fresh checkpoint, so it re-processes its source.
 
     State-partition count is fixed at stream START and each partition pays a
     state-store commit per batch — locally that IO dominates, so pin shuffle
@@ -126,25 +141,34 @@ def _drain_to_table(
     unmatched rows only when the trailing no-data batch advances the
     watermark — those callers pass ``no_data_batch=True`` (st9).
     """
+    pinned = {
+        "spark.sql.shuffle.partitions": str(partitions),
+        "spark.sql.streaming.noDataMicroBatches.enabled":
+            "true" if no_data_batch else "false",
+    }
+    prev = {k: spark.conf.get(k) for k in pinned}
+    for k, v in pinned.items():
+        spark.conf.set(k, v)
+    try:
+        with scratch(f"adw_ckpt_{prefix}_", tmpfs=True) as ckpt:
+            yield ckpt
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+def _drain_to_table(
+    spark: SparkSession, stream_df: DataFrame, prefix: str, *, partitions: int = 4,
+    no_data_batch: bool = False,
+) -> DataFrame:
+    """AvailableNow-drain a streaming frame into a uniquely-named memory table
+    (see :func:`_drain_scope` for the checkpoint and the pinned settings)."""
     from agent_data_wrangler_spark.streaming import run_available_now
 
     name = f"{prefix}_{next(_STREAM_SEQ)}"
-    ckpt = _scratch_dir(f"adw_ckpt_{prefix}_", tmpfs=True)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", str(partitions))
-    spark.conf.set(
-        "spark.sql.streaming.noDataMicroBatches.enabled",
-        "true" if no_data_batch else "false",
-    )
-    try:
+    with _drain_scope(spark, prefix, partitions=partitions,
+                      no_data_batch=no_data_batch) as ckpt:
         run_available_now(stream_df, name, ckpt)
-    finally:
-        # The memory table holds the result; nothing reads the checkpoint
-        # once the drain has returned.
-        _drop_scratch(ckpt)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata)
     return spark.table(name)
 
 
@@ -534,10 +558,9 @@ def n6_simhash_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st1_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from agent_data_wrangler_spark.streaming import stream_from_directory, windowed_agg
+    from agent_data_wrangler_spark.streaming import windowed_agg
 
-    staged, schema = _staged_events(spark, sf_dir)
-    sdf = stream_from_directory(spark, staged, schema).filter(
+    sdf = _event_stream(spark, sf_dir).filter(
         F.col("value").isNotNull()
     )
     windowed = windowed_agg(
@@ -579,10 +602,9 @@ def st1_streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st2_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from agent_data_wrangler_spark.streaming import session_agg, stream_from_directory
+    from agent_data_wrangler_spark.streaming import session_agg
 
-    staged, schema = _staged_events(spark, sf_dir)
-    sdf = stream_from_directory(spark, staged, schema).select("user_id", "ts")
+    sdf = _event_stream(spark, sf_dir).select("user_id", "ts")
     sessions = session_agg(
         sdf, "ts", "30 minutes", ["user_id"],
         [F.count(F.lit(1)).alias("n")],
@@ -607,10 +629,9 @@ def st2_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle="SELECT CAST(count(DISTINCT event_id) AS BIGINT) AS n_unique_events FROM events",
 )
 def st3_streaming_dedup_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from agent_data_wrangler_spark.streaming import dedup_within_watermark, stream_from_directory
+    from agent_data_wrangler_spark.streaming import dedup_within_watermark
 
-    staged, schema = _staged_events(spark, sf_dir)
-    sdf = stream_from_directory(spark, staged, schema).select("event_id", "ts")
+    sdf = _event_stream(spark, sf_dir).select("event_id", "ts")
     deduped = dedup_within_watermark(sdf, ["event_id"], "ts", watermark="365 days")
     out = _drain_to_table(spark, deduped, "st3_out")
     return out.agg(F.count(F.lit(1)).cast("bigint").alias("n_unique_events"))
@@ -1264,14 +1285,9 @@ def mm5_audio_neardup_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st4_streaming_enriched_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from agent_data_wrangler_spark.streaming import (
-        enrich_static,
-        stream_from_directory,
-        windowed_agg,
-    )
+    from agent_data_wrangler_spark.streaming import enrich_static, windowed_agg
 
-    staged, schema = _staged_events(spark, sf_dir)
-    sdf = stream_from_directory(spark, staged, schema).select("user_id", "ts", "value")
+    sdf = _event_stream(spark, sf_dir).select("user_id", "ts", "value")
     dim = read_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
@@ -1311,47 +1327,41 @@ def st4_streaming_enriched_segments(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def st5_incremental_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from agent_data_wrangler_spark.streaming import (
-        run_foreach_batch,
-        stream_from_directory,
-    )
+    from agent_data_wrangler_spark.streaming import run_foreach_batch
 
-    staged, schema = _staged_events(spark, sf_dir)
-    # 2 files per trigger over the 4 staged files → exactly 2 micro-batches:
-    # enough to prove incremental maintenance, half the state-commit cost of
-    # one-batch-per-file.
-    sdf = stream_from_directory(
-        spark, staged, schema, max_files_per_trigger=2
-    ).select("ts", "event_type", "value")
-    agg = sdf.groupBy(
-        F.window("ts", "1 day").alias("w"), "event_type"
-    ).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n"),
-        F.round(F.sum("value"), 2).alias("sum_value"),
-    )
-    rollup_dir = os.path.join(_scratch_dir("adw_rollup_", tmpfs=True), "daily")
+    def build(base: str) -> tuple[str, StructType]:
+        # 2 files per trigger over the 4 staged files → exactly 2
+        # micro-batches: enough to prove incremental maintenance, half the
+        # state-commit cost of one-batch-per-file.
+        sdf = _event_stream(spark, sf_dir, max_files_per_trigger=2).select(
+            "ts", "event_type", "value")
+        rollup = sdf.groupBy(
+            F.window("ts", "1 day").alias("w"), "event_type"
+        ).agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.round(F.sum("value"), 2).alias("sum_value"),
+        ).select(
+            F.col("w").getField("start").alias("day"), "event_type", "n",
+            "sum_value",
+        )
+        rollup_dir = os.path.join(base, "daily")
 
-    def upsert(batch_df: DataFrame, batch_id: int) -> None:
-        # Complete mode hands the full current state each batch; the rollup
-        # table is atomically replaced (at scale: partition-overwrite of only
-        # the windows this batch touched, or a MERGE INTO a lakehouse table).
-        batch_df.select(
-            F.col("w").getField("start").alias("day"), "event_type", "n", "sum_value"
-        ).write.mode("overwrite").parquet(rollup_dir)
+        def upsert(batch_df: DataFrame, batch_id: int) -> None:
+            # Complete mode hands the full current state each batch; the
+            # rollup table is atomically replaced (at scale: partition-
+            # overwrite of only the windows this batch touched, or a MERGE
+            # INTO a lakehouse table).
+            batch_df.write.mode("overwrite").parquet(rollup_dir)
 
-    ckpt = _scratch_dir("adw_ckpt_st5_", tmpfs=True)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_nodata = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    try:
-        run_foreach_batch(agg, upsert, ckpt, output_mode="complete")
-    finally:
-        # The returned frame reads rollup_dir, never the checkpoint.
-        _drop_scratch(ckpt)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata)
-    return spark.read.parquet(rollup_dir)
+        with _drain_scope(spark, "st5") as ckpt:
+            run_foreach_batch(rollup, upsert, ckpt, output_mode="complete")
+        return rollup_dir, rollup.schema
+
+    # The rollup is maintained once per events version; reading it under
+    # the stream's declared schema fires no inference job.
+    rollup_dir, schema = staged(sf_dir, ("events",), ("rollup",), build,
+                                tmpfs=True)
+    return spark.read.schema(schema).parquet(rollup_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1976,14 +1986,10 @@ def sq1_portable_sql_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def st6_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
 
-    from agent_data_wrangler_spark.streaming import (
-        sessionize_stateful,
-        stream_from_directory,
-    )
+    from agent_data_wrangler_spark.streaming import sessionize_stateful
 
-    staged, schema = _staged_events(spark, sf_dir)
     sdf = (
-        stream_from_directory(spark, staged, schema, max_files_per_trigger=2)
+        _event_stream(spark, sf_dir, max_files_per_trigger=2)
         .filter(F.col("value").isNotNull())
         .select("user_id", F.round(F.col("value") * 100).cast("bigint").alias("cents"))
     )
@@ -2051,15 +2057,10 @@ if _tws_ok():
         """,
     )
     def st10_tws_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from agent_data_wrangler_spark.streaming import (
-            stream_from_directory,
-            user_totals_tws,
-        )
+        from agent_data_wrangler_spark.streaming import user_totals_tws
 
-        staged, schema = _staged_events(spark, sf_dir)
         sdf = (
-            stream_from_directory(
-                spark, staged, schema, max_files_per_trigger=2)
+            _event_stream(spark, sf_dir, max_files_per_trigger=2)
             .filter(F.col("value").isNotNull())
             .select(
                 "user_id",
@@ -2484,19 +2485,15 @@ def mx1_mixture_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def st7_stream_stream_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from agent_data_wrangler_spark.streaming import (
-        stream_from_directory,
-        stream_interval_join,
-    )
+    from agent_data_wrangler_spark.streaming import stream_interval_join
 
-    staged, schema = _staged_events(spark, sf_dir)
     clicks = (
-        stream_from_directory(spark, staged, schema)
+        _event_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
     )
     purchases = (
-        stream_from_directory(spark, staged, schema)
+        _event_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
     )
@@ -4512,19 +4509,15 @@ def pq1_pq_topk_embeddings(h: Held, spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def st9_stream_outer_join_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from agent_data_wrangler_spark.streaming import (
-        stream_from_directory,
-        stream_interval_join_outer,
-    )
+    from agent_data_wrangler_spark.streaming import stream_interval_join_outer
 
-    staged, schema = _staged_events(spark, sf_dir)
     clicks = (
-        stream_from_directory(spark, staged, schema)
+        _event_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")
         .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
     )
     purchases = (
-        stream_from_directory(spark, staged, schema)
+        _event_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
         .select(F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts"))
     )
@@ -5342,9 +5335,7 @@ def _sd1_account(
 # (healthy audit of a just-built layout must pass; the tampered copy must
 # fail) and asserted against the oracle's constants.
 # ---------------------------------------------------------------------------
-@query(
-    "ix1_index_freshness_audit",
-    oracle="""
+_IX_ORACLE = """
     SELECT CAST(count(*) AS BIGINT) AS n_source,
            CAST(count(*) AS BIGINT) AS n_indexed,
            CAST(0 AS BIGINT) AS n_missing,
@@ -5352,56 +5343,53 @@ def _sd1_account(
            true AS healthy_ok,
            true AS tamper_detected_ok
     FROM embeddings
-    """,
-)
-def ix1_index_freshness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
+    """
 
-    e = read_table(spark, sf_dir, "embeddings")
-    path = _staged_ivf(spark, sf_dir)
-    healthy = similarity.audit_ivf_layout(spark, path, e, id_col="vec_id")
-    # Tamper fixture: copy the layout, drop one inverted-list partition but
-    # keep the sidecar claiming it exists — the "lost partition directory"
-    # failure mode. The audit must flag BOTH legs: source coverage
-    # (n_missing > 0) and sidecar integrity (stats_ok False).
-    scratch = _scratch_dir("adw_ix1_", tmpfs=True)
-    tampered_dir = os.path.join(scratch, "tampered")
 
-    def _link_or_copy(src: str, dst: str, *, follow_symlinks: bool = True) -> str:
-        # r13-opt: ix2's ADVICE fix applied here too — hard links cost zero
-        # extra tmpfs space and no byte copy per invocation; the tamper is
-        # directory-level (rmtree of one __list dir), so shared inodes are
-        # never mutated. EXDEV fallback covers a cross-filesystem scratch.
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst, follow_symlinks=follow_symlinks)
-        return dst
+def _link_or_copy(src: str, dst: str, *, follow_symlinks: bool = True) -> str:
+    # Hard links cost zero extra tmpfs space and no byte copy per call (a
+    # byte copy would transiently DOUBLE the layout's footprint just to
+    # delete one partition dir). EXDEV fallback covers a cross-filesystem
+    # scratch.
+    try:
+        os.link(src, dst)
+    except OSError:
+        shutil.copy2(src, dst, follow_symlinks=follow_symlinks)
+    return dst
 
+
+def _freshness_audit(
+    spark: SparkSession, e: DataFrame, path: str,
+    audit: Callable[..., dict], part_prefix: str,
+) -> DataFrame:
+    """ix1/ix2's shared body: ``audit`` the staged layout at ``path``
+    against ``e``, then prove the audit detects staleness on a tampered
+    copy — one ``part_prefix`` partition dir dropped, the sidecar kept (the
+    "lost partition directory" failure mode). The tamper must flag BOTH
+    legs: source coverage (n_missing > 0) and sidecar integrity (stats_ok
+    False)."""
     from agent_data_wrangler_spark.sources.readers import _path_identity
 
-    # r14 (ADVICE): the hard-linked copy shares inodes with the live staged
-    # layout — safe ONLY while the tamper is unlink/rmtree-shaped. Enforce
-    # the invariant instead of trusting the comment: fingerprint the source
-    # layout (per-file mtime_ns:size) before the tamper and verify it is
-    # untouched after, so any future in-place write to the tampered copy
-    # fails loudly here rather than silently corrupting the source.
+    healthy = audit(spark, path, e, id_col="vec_id")
+    # The hard-linked copy shares inodes with the live staged layout — safe
+    # ONLY while the tamper is unlink/rmtree-shaped. Enforce the invariant
+    # instead of trusting the comment: fingerprint the source layout
+    # (per-file mtime_ns:size) before the tamper and verify it is untouched
+    # after, so any future in-place write to the tampered copy fails loudly
+    # here rather than silently corrupting the source.
     src_ident = _path_identity(path)
-    shutil.copytree(path, tampered_dir, copy_function=_link_or_copy)
-    victim = sorted(
-        d for d in os.listdir(tampered_dir) if d.startswith("__list=")
-    )[0]
-    shutil.rmtree(os.path.join(tampered_dir, victim))
-    if _path_identity(path) != src_ident:
-        raise RuntimeError(
-            "ix1 tamper fixture mutated the live staged layout through a "
-            "shared inode — the tamper step must only unlink/rmtree")
-    try:
-        tampered = similarity.audit_ivf_layout(
-            spark, tampered_dir, e, id_col="vec_id"
-        )
-    finally:
-        _drop_scratch(scratch)
+    with scratch("adw_tamper_", tmpfs=True) as base:
+        tampered_dir = os.path.join(base, "tampered")
+        shutil.copytree(path, tampered_dir, copy_function=_link_or_copy)
+        victim = sorted(
+            d for d in os.listdir(tampered_dir) if d.startswith(part_prefix)
+        )[0]
+        shutil.rmtree(os.path.join(tampered_dir, victim))
+        if _path_identity(path) != src_ident:
+            raise RuntimeError(
+                "tamper fixture mutated the live staged layout through a "
+                "shared inode — the tamper step must only unlink/rmtree")
+        tampered = audit(spark, tampered_dir, e, id_col="vec_id")
     return spark.range(1).select(
         F.lit(healthy["n_source"]).cast("bigint").alias("n_source"),
         F.lit(healthy["n_indexed"]).cast("bigint").alias("n_indexed"),
@@ -5418,6 +5406,13 @@ def ix1_index_freshness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("tamper_detected_ok"),
     )
+
+
+@query("ix1_index_freshness_audit", oracle=_IX_ORACLE)
+def ix1_index_freshness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _freshness_audit(
+        spark, read_table(spark, sf_dir, "embeddings"),
+        _staged_ivf(spark, sf_dir), similarity.audit_ivf_layout, "__list=")
 
 
 # ---------------------------------------------------------------------------
@@ -6625,63 +6620,9 @@ def sd2_semantic_dedup_recall_embeddings(spark: SparkSession, sf_dir: str) -> Da
 # coverage gaps and both verdict booleans are computed GENUINELY Spark-side
 # and asserted against the oracle's constants (the ix1 pattern).
 # ---------------------------------------------------------------------------
-@query(
-    "ix2_lsh_freshness_audit",
-    oracle="""
-    SELECT CAST(count(*) AS BIGINT) AS n_source,
-           CAST(count(*) AS BIGINT) AS n_indexed,
-           CAST(0 AS BIGINT) AS n_missing,
-           CAST(0 AS BIGINT) AS n_orphaned,
-           true AS healthy_ok,
-           true AS tamper_detected_ok
-    FROM embeddings
-    """,
-)
+@query("ix2_lsh_freshness_audit", oracle=_IX_ORACLE)
 def ix2_lsh_freshness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-
-    e = read_table(spark, sf_dir, "embeddings")
     path, _, _ = _staged_lsh(spark, sf_dir)
-    healthy = similarity.audit_lsh_layout(spark, path, e, id_col="vec_id")
-    scratch = _scratch_dir("adw_ix2_", tmpfs=True)
-    tampered_dir = os.path.join(scratch, "tampered")
-
-    def _link_or_copy(src: str, dst: str, *, follow_symlinks: bool = True) -> str:
-        # Hard links cost zero extra tmpfs space (the scratch dir prefers
-        # /dev/shm — a byte copy would transiently DOUBLE the layout's
-        # footprint just to delete one partition directory). The tamper is
-        # directory-level (rmtree of one __bpart dir), so shared inodes are
-        # never mutated. EXDEV fallback covers a cross-filesystem scratch.
-        try:
-            os.link(src, dst)
-        except OSError:
-            shutil.copy2(src, dst, follow_symlinks=follow_symlinks)
-        return dst
-
-    shutil.copytree(path, tampered_dir, copy_function=_link_or_copy)
-    victim = sorted(
-        d for d in os.listdir(tampered_dir) if d.startswith("__bpart=")
-    )[0]
-    shutil.rmtree(os.path.join(tampered_dir, victim))
-    try:
-        tampered = similarity.audit_lsh_layout(
-            spark, tampered_dir, e, id_col="vec_id"
-        )
-    finally:
-        _drop_scratch(scratch)
-    return spark.range(1).select(
-        F.lit(healthy["n_source"]).cast("bigint").alias("n_source"),
-        F.lit(healthy["n_indexed"]).cast("bigint").alias("n_indexed"),
-        F.lit(healthy["n_missing"]).cast("bigint").alias("n_missing"),
-        F.lit(healthy["n_orphaned"]).cast("bigint").alias("n_orphaned"),
-        F.lit(
-            bool(healthy["fresh_ok"] and healthy["stats_ok"] is True)
-        ).alias("healthy_ok"),
-        F.lit(
-            bool(
-                tampered["n_missing"] > 0
-                and tampered["stats_ok"] is False
-                and not tampered["fresh_ok"]
-            )
-        ).alias("tamper_detected_ok"),
-    )
+    return _freshness_audit(
+        spark, read_table(spark, sf_dir, "embeddings"), path,
+        similarity.audit_lsh_layout, "__bpart=")

@@ -217,9 +217,14 @@ def test_dg1_is_topk_heap_over_rollup(spark, sf_dir):
 def test_staged_layouts_rebuild_on_source_rewrite(spark, sf_dir, tmp_path):
     """A staged scratch layout is reused only while its source keeps its
     file identity: rewriting events.parquet in place (same path, half the
-    rows) must make csv1's export, pp1's partitioned copy, cq1's dirty CSV
-    and pd2's manifest sink rebuild, and the rebuild REPLACES the memo
-    entry instead of adding one and removes the superseded dirs."""
+    rows) must make csv1's export, pp1's partitioned copy, cq1's dirty CSV,
+    pd2's manifest sink, cm1's compacted copy, zo1's z-ordered copy, pl2's
+    event log and st5's rollup rebuild, and a documents rewrite must make
+    bin1 restage its files. Repeat calls on unchanged sources keep one dir
+    per layout, and a rebuild REPLACES the memo entry instead of adding
+    one and removes the superseded dir."""
+    from collections import Counter
+
     import pyarrow.parquet as pq
 
     from __spark_entry__ import queries
@@ -227,40 +232,116 @@ def test_staged_layouts_rebuild_on_source_rewrite(spark, sf_dir, tmp_path):
     src = tmp_path / "sf"
     src.mkdir()
     events = src / "events.parquet"
+    documents = src / "documents.parquet"
     shutil.copy(os.path.join(str(sf_dir), "events.parquet"), events)
-    csv1 = queries()["csv1_roundtrip_events"]
-    pp1 = queries()["pp1_partition_pruned_events"]
-    cq1 = queries()["cq1_csv_quarantine_events"]
-    pd2 = queries()["pd2_python_datasink_roundtrip"]
+    shutil.copy(os.path.join(str(sf_dir), "documents.parquet"), documents)
+    q = {short: fn for name, fn in queries().items()
+         for short in ("bin1", "cm1", "cq1", "csv1", "pd2", "pl2", "pp1",
+                       "st5", "zo1") if name.startswith(short + "_")}
+    kinds = ["bin1", "cm1", "cq1", "csv", "part", "pd2", "pl2", "rollup",
+             "stream", "zo1"]
+    ours = set(derived._SCRATCH)
 
-    def seen() -> tuple[int, int, int, int]:
-        n_rows = sum(r["n"] for r in csv1(spark, str(src)).collect())
-        cq = cq1(spark, str(src)).first()
-        return (n_rows, pp1(spark, str(src)).first()["n"],
-                cq["n_good"] + cq["n_quarantined"],
-                sum(r["n"] for r in pd2(spark, str(src)).collect()))
+    def live_dirs() -> Counter:
+        """This test's scratch dirs that still exist, by layout kind."""
+        return Counter(os.path.basename(d).split("_")[1]
+                       for d in derived._SCRATCH
+                       if d not in ours and os.path.isdir(d))
 
-    def expected(n_rows: int) -> tuple[int, int, int, int]:
+    def first(name: str):
+        return q[name](spark, str(src)).first()
+
+    def seen() -> tuple[int, ...]:
+        n_rows = sum(r["n"] for r in q["csv1"](spark, str(src)).collect())
+        cq = first("cq1")
+        log = q["pl2"](spark, str(src)).filter(
+            (F.col("event") == "stage_end")
+            & (F.col("stage") == "drop_null_values")).first()
+        return (n_rows, first("pp1")["n"], cq["n_good"] + cq["n_quarantined"],
+                sum(r["n"] for r in q["pd2"](spark, str(src)).collect()),
+                first("cm1")["n_rows"], first("zo1")["n_rows"],
+                log["rows_in"],
+                sum(r["n"] for r in q["st5"](spark, str(src)).collect()),
+                first("bin1")["n_files"])
+
+    def expected(n_rows: int) -> tuple[int, ...]:
         ev = read_table(spark, str(src), "events")
         assert ev.count() == n_rows
         purchases = ev.filter(F.col("event_type") == "purchase").count()
-        return n_rows, purchases, n_rows, n_rows
+        n_docs = read_table(spark, str(src), "documents").filter(
+            F.col("doc_id") < 50).count()
+        return (n_rows, purchases, n_rows, n_rows, n_rows, n_rows, n_rows,
+                n_rows, n_docs)
 
     table = pq.read_table(events)
-    assert seen() == expected(table.num_rows)
+    for _ in range(3):
+        assert seen() == expected(table.num_rows)
+    assert live_dirs() == Counter(kinds)
     n_entries = len(derived._STAGED)
     superseded = [base for (_kind, d), (_ident, base, _value)
                   in derived._STAGED.items() if d == str(src)]
 
     half = table.slice(0, table.num_rows // 2)
     pq.write_table(half, events)
+    pq.write_table(pq.read_table(documents).slice(0, 25), documents)
     assert seen() == expected(half.num_rows)
     assert len(derived._STAGED) == n_entries
     assert sorted(kind[0] for kind, d in derived._STAGED
-                  if d == str(src)) == ["cq1", "csv", "part", "pd2"]
-    assert len(superseded) == 4
+                  if d == str(src)) == kinds
+    assert len(superseded) == len(kinds)
     for base in superseded:
         assert not os.path.exists(base), f"superseded layout kept: {base}"
+    assert live_dirs() == Counter(kinds)
+
+
+def test_bk1_follows_orders_rewrite_and_lost_catalog(spark, sf_dir, tmp_path):
+    """bk1's bucketed tables are staged per source version: after an
+    in-place orders rewrite it returns the rows fresh files give, and a
+    session whose catalog lost the tables still reads the staged files."""
+    import pyarrow.parquet as pq
+
+    from __spark_entry__ import queries
+    from agent_data_wrangler_spark.queryset import _bucketed_orders_customer
+
+    src = tmp_path / "sf"
+    src.mkdir()
+    for t in ("orders", "customer"):
+        shutil.copy(os.path.join(str(sf_dir), f"{t}.parquet"),
+                    src / f"{t}.parquet")
+    bk1 = queries()["bk1_bucketed_join_revenue"]
+
+    def rows() -> list[tuple]:
+        return sorted(map(tuple, bk1(spark, str(src)).collect()))
+
+    def fresh() -> list[tuple]:
+        o = read_table(spark, str(src), "orders")
+        c = read_table(spark, str(src), "customer")
+        return sorted(map(tuple, o.join(c, o.o_custkey == c.c_custkey)
+                          .groupBy(F.col("c_mktsegment").alias("segment"))
+                          .agg(F.count(F.lit(1)).alias("n_orders"),
+                               F.round(F.sum("o_totalprice"), 2)
+                               .alias("revenue")).collect()))
+
+    def same(got, want) -> bool:
+        return ([r[:2] for r in got] == [r[:2] for r in want]
+                and all(g[2] == pytest.approx(w[2], abs=0.011)
+                        for g, w in zip(got, want)))
+
+    names = _bucketed_orders_customer(spark, str(src))
+    try:
+        assert same(rows(), fresh())
+        orders = src / "orders.parquet"
+        table = pq.read_table(orders)
+        pq.write_table(table.slice(0, table.num_rows // 2), orders)
+        want = fresh()
+        assert same(rows(), want), "orders rewrite served the stale join"
+
+        for name in names:
+            spark.sql(f"DROP TABLE {name}")
+        assert same(rows(), want), "dropped catalog tables lost the join"
+    finally:
+        for name in names:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 def test_staged_export_keys_every_build_parameter(spark, sf_dir):

@@ -1,5 +1,6 @@
-"""Scoped persistence (operators/held.py): the helper's contract, and a
-source guard that keeps every cache in the engine going through it."""
+"""Scoped persistence (operators/held.py): the helper's contract, and
+source guards that keep every cache in the engine going through it and
+every scratch dir going through plans/derived.py."""
 
 from __future__ import annotations
 
@@ -27,6 +28,24 @@ def test_engine_caches_only_through_held():
             if _CACHE_CALL.search(line) and (rel, line.strip()) not in _EXEMPT:
                 hits.append(f"{rel}:{no}: {line.strip()}")
     assert not hits, "persist outside operators/held.py:\n" + "\n".join(hits)
+
+
+_SCRATCH_NAMES = re.compile(r"\btempfile\b|_scratch_dir|_drop_scratch")
+
+
+def test_engine_makes_scratch_only_through_derived():
+    """Every scratch dir has one of plans/derived.py's two lifetimes
+    (``staged`` or ``scratch``); no other engine module makes or removes
+    one itself."""
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        if rel == "plans/derived.py":
+            continue
+        for no, line in enumerate(path.read_text().splitlines(), 1):
+            if _SCRATCH_NAMES.search(line):
+                hits.append(f"{rel}:{no}: {line.strip()}")
+    assert not hits, "scratch outside plans/derived.py:\n" + "\n".join(hits)
 
 
 def _cache_empty(spark) -> bool:

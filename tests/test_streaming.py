@@ -322,15 +322,16 @@ def test_drain_removes_its_checkpoint(spark, sf_dir, monkeypatch):
     import os
 
     from agent_data_wrangler_spark import queryset_nstar
+    from agent_data_wrangler_spark.plans import derived
 
     made = []
-    real = queryset_nstar._scratch_dir
+    real = derived._scratch_dir
 
     def spy(prefix, *, tmpfs):
         made.append(real(prefix, tmpfs=tmpfs))
         return made[-1]
 
-    monkeypatch.setattr(queryset_nstar, "_scratch_dir", spy)
+    monkeypatch.setattr(derived, "_scratch_dir", spy)
     rows = queryset_nstar.QUERIES["st1_streaming_window_counts"](
         spark, str(sf_dir)).collect()
     ckpts = [d for d in made if os.path.basename(d).startswith("adw_ckpt_")]
